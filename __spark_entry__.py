@@ -1,4 +1,7 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver entry point and the operator parity suite.
+
+``entry(spark)`` resolves the sf0.001 ``documents`` table with the same
+``pipeline.run`` the CLI and the benchmark call.
 
 Every entry in ``queries()`` is an operator from SURVEY.md §2 (or a
 training-data-pipeline op the north star adds), expressed Spark-first in
@@ -310,49 +313,6 @@ def q16_cube_counts(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .cube("r_name", "c_mktsegment")
         .agg(F.count("*").alias("n_customers"))
-    )
-
-
-def q17_asof_join(spark, sf_dir):
-    """As-of join (composed from built-ins; see operators/asof.py for the
-    merge_asof scale path)."""
-    from dedupe_spark.operators.asof import asof_join
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", F.col("o_custkey").alias("user_id"), "o_orderdate"
-    )
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    out = asof_join(o, e, key="user_id", left_ts="o_orderdate", right_ts="ts", right_vals=["event_id"])
-    return out.select("o_orderkey", F.col("asof_event_id").alias("last_event_id"))
-
-
-def q17b_asof_join_pandas(spark, sf_dir):
-    """As-of join, cogroup + pd.merge_asof scale path (applyInPandas;
-    sorted O(n+m) merge per key group) — same semantics as q17's
-    composed built-in variant, checked against the same SQL oracle."""
-    from dedupe_spark.operators.asof import asof_join_pandas
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", F.col("o_custkey").alias("user_id"), "o_orderdate"
-    )
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
-    out = asof_join_pandas(
-        o, e, key="user_id", left_ts="o_orderdate", right_ts="ts", right_vals=["event_id"]
-    )
-    return out.select("o_orderkey", F.col("asof_event_id").alias("last_event_id"))
-
-
-def q18_range_join(spark, sf_dir):
-    """Bounded range join via time bucketization."""
-    from dedupe_spark.operators.asof import range_join_count
-
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderkey", F.col("o_custkey").alias("user_id"), "o_orderdate"
-    )
-    e = _t(spark, sf_dir, "events")
-    return range_join_count(
-        o, e, left_id="o_orderkey", key="user_id", left_ts="o_orderdate",
-        right_ts="ts", window_seconds=7 * 86400,
     )
 
 
@@ -681,64 +641,6 @@ def q36_jaro_winkler_pairs(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def q30_cosine_topk(spark, sf_dir):
-    """Brute-force cosine top-k (broadcast query side, zip_with dot)."""
-    from dedupe_spark.operators.similarity import brute_force_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 5)
-    out = brute_force_topk(e, q, k=5)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
-def q35_bucketed_ann_topk(spark, sf_dir):
-    """IVF-style bucketed approximate top-k: probe only the query's
-    Philox-seeded random-hyperplane sign bucket (the scale path of q30 —
-    at 100 TB the bucket is a partition column and pruning does the
-    rest). The oracle embeds the identical plane literals, so the
-    approximate result set is compared exactly."""
-    from dedupe_spark.operators.similarity import bucketed_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 5)
-    out = bucketed_topk(e, q, k=5, planes=3)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
-def q35b_ann_multiprobe(spark, sf_dir):
-    """Multi-probe bucketed ANN: each query probes its sign bucket plus
-    every Hamming-1 neighbor bucket (recall lift for boundary queries at
-    a 1 -> 1+planes probe-cost multiplier). The oracle enumerates the
-    identical probe list, so the approximate result set is compared
-    exactly."""
-    from dedupe_spark.operators.similarity import bucketed_topk
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") < 5)
-    out = bucketed_topk(e, q, k=5, planes=3, multiprobe=True)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
-def q39_ivf_ann_topk(spark, sf_dir):
-    """IVF ANN: vectors are assigned to their nearest coarse centroid
-    (an inverted file — at scale the cell is a stored partition column)
-    and each query brute-forces only its nprobe=2 nearest cells. The
-    data-adaptive counterpart of the sign-bucket LSH path (q35): cells
-    follow the embedding distribution instead of fixed hyperplanes.
-    Centroids here are the deterministic ivf_train init (the 8 lowest
-    vec_ids' embeddings, zero Lloyd iterations) so the oracle can build
-    the identical quantizer in SQL; Lloyd refinement is property-tested
-    (tests/test_ivf.py) since iterative averaging is where engines'
-    float paths diverge."""
-    from dedupe_spark.operators.similarity import ivf_topk, ivf_train
-
-    e = _t(spark, sf_dir, "embeddings")
-    cents = ivf_train(e, n_centroids=8, iterations=0)
-    q = e.where(F.col("vec_id") < 5)
-    out = ivf_topk(e, q, cents, k=5, nprobe=2)
-    return out.select("query_id", "neighbor_id", "rank")
-
-
 def q31_embedding_neardup(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs — **banded**: random-
     hyperplane sign-bucket LSH (4 Philox-seeded planes -> 16 buckets)
@@ -996,37 +898,6 @@ def q51_tfidf_top_terms(spark, sf_dir):
     return tfidf_top_terms(d, "doc_id", "text", k=3)
 
 
-def q52_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): IVF-cell clustering + within-cell
-    pairwise cosine; drop vectors with a >=0.4-similar lower-id
-    cell-mate. The only quadratic work is per-cell (the paper's trick);
-    at scale the cell is a stored partition column. Centroids are the
-    deterministic zero-iteration ivf_train init so the oracle builds
-    the identical quantizer in SQL (same convention as q39)."""
-    from dedupe_spark.operators.similarity import semantic_dedup
-
-    e = _t(spark, sf_dir, "embeddings")
-    return semantic_dedup(e, n_centroids=8, threshold=0.4).select(
-        "vec_id", "cell", "n_dups", "keep"
-    )
-
-
-def q53_curate(spark, sf_dir):
-    """End-to-end corpus curation verdict (operators/curation.py):
-    quality funnel -> exact dedup -> MinHash-candidate + verified-
-    Jaccard near-dedup -> benchmark decontamination, one verdict per
-    doc with fixed precedence. Training split doc_id % 20 != 0,
-    benchmark split % 20 == 0 (as q49). The expensive stages only ever
-    see earlier-stage survivors — the plan shape of a real 100 TB
-    curation run."""
-    from dedupe_spark.operators.curation import curate
-
-    d = _t(spark, sf_dir, "documents")
-    train = d.where(F.col("doc_id") % 20 != 0)
-    bench = d.where(F.col("doc_id") % 20 == 0)
-    return curate(train, bench, "doc_id", "text")
-
-
 def q54_pii_scrub(spark, sf_dir):
     """PII scrub (operators/privacy.py): redact emails / IPv4s / phone
     numbers with codegen'd regexp_replace, counting what each rule
@@ -1060,21 +931,6 @@ def q54_pii_scrub(spark, sf_dir):
     )
     return pii_scrub(d, "doc_id", "text").select(
         F.col("id").alias("doc_id"), "redacted", "n_email", "n_ipv4", "n_phone", "has_pii"
-    )
-
-
-def q55_stratified_sample(spark, sf_dir):
-    """Deterministic per-language corpus sampling (operators/sampling.py):
-    keep rows whose md5-prefix falls under the stratum's hex threshold —
-    the same sample on every run and every cluster size, unlike
-    df.sample(). One codegen'd filter, no shuffle; at 100 TB the mixture
-    pass prunes at scan speed."""
-    from dedupe_spark.operators.sampling import stratified_sample
-
-    d = _t(spark, sf_dir, "documents")
-    rates = {"en": 0.5, "de": 0.25, "fr": 0.25, "es": 0.125, "zh": 0.0625}
-    return stratified_sample(d, "doc_id", "lang", rates, default_rate=0.0).select(
-        "doc_id", "lang"
     )
 
 
@@ -1222,21 +1078,6 @@ def q62_sorted_neighborhood_pairs(spark, sf_dir):
         "bkey", F.substring(norm_text("text"), 1, 24)
     )
     return sorted_neighborhood_pairs(d, "doc_id", "bkey", window=3)
-
-
-def q63_tfidf_cosine_pairs(spark, sf_dir):
-    """TF-IDF-weighted cosine pair scoring (operators/scoring.py:
-    tfidf_cosine_on_pairs) — rarity-weighted token overlap on the q36
-    deterministic consecutive-id pair set; candidates-first, the
-    quadratic all-pairs space never materializes."""
-    from dedupe_spark.operators.scoring import tfidf_cosine_on_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    pairs = d.select(F.col("doc_id").alias("id_a")).join(
-        d.select((F.col("doc_id") - 1).alias("id_a"), F.col("doc_id").alias("id_b")),
-        "id_a",
-    )
-    return tfidf_cosine_on_pairs(d, pairs, "doc_id", "text")
 
 
 _FS_PAIR_OFFSETS = (1, 13)  # +1 is near-dup-rich in the fixture, +13 mostly non-match
@@ -2104,22 +1945,25 @@ def q74_containment_pairs(spark, sf_dir):
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: document near-dup clustering on sf0.001 — MinHash/LSH
-    blocking first, exact-Jaccard verification computed **only on the
-    candidate pairs** (the reference's probe -> verify order,
-    src/deduplication.cpp:1405-1417), then connected components. The
-    quadratic gram self-join never runs."""
-    from dedupe_spark.operators.clustering import clusters_with_singletons, connected_components
-    from dedupe_spark.operators.dedup import minhash_lsh_pairs, ngram_jaccard_on_pairs
+    """Document near-duplicate clustering on sf0.001: each document becomes
+    a one-turn conversation, ``pipeline.run`` clusters them, and the result
+    comes back as ``(doc_id bigint, cluster_id bigint)``, one row per
+    document."""
+    from dedupe_spark import pipeline
 
     sf_dir = "/root/testdata/sf0.001"
-    d = _t(spark, sf_dir, "documents")
-    cands = minhash_lsh_pairs(d, "doc_id", "text", num_perm=12, rows_per_band=2)
-    verified = ngram_jaccard_on_pairs(d, cands, "doc_id", "text", n=3, threshold=0.6)
-    edges = verified.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    cc = connected_components(edges)
-    return clusters_with_singletons(d.select(F.col("doc_id").alias("conv_id")), cc).select(
-        F.col("conv_id").alias("doc_id"), "cluster_id"
+    transcripts = _t(spark, sf_dir, "documents").select(
+        F.col("doc_id").cast("string").alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit("user").alias("role"),
+        "text",
+        F.lit(None).cast("string").alias("tool"),
+        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
+    )
+    clusters = pipeline.run(transcripts).clusters
+    return clusters.select(
+        F.col("conv_id").cast("bigint").alias("doc_id"),
+        F.col("cluster_id").cast("bigint").alias("cluster_id"),
     )
 
 
@@ -2141,9 +1985,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q14_running_total": q14_running_total,
         "q15_pivot_order_status": q15_pivot_order_status,
         "q16_cube_counts": q16_cube_counts,
-        "q17_asof_join": q17_asof_join,
-        "q17b_asof_join_pandas": q17b_asof_join_pandas,
-        "q18_range_join": q18_range_join,
         "q19_multiway_join": q19_multiway_join,
         "q20_exact_dedup_docs": q20_exact_dedup_docs,
         "q21_minhash_lsh_pairs": q21_minhash_lsh_pairs,
@@ -2159,10 +2000,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q49_decontaminate": q49_decontaminate,
         "q50_filter_funnel": q50_filter_funnel,
         "q51_tfidf_top_terms": q51_tfidf_top_terms,
-        "q52_semantic_dedup": q52_semantic_dedup,
-        "q53_curate": q53_curate,
         "q54_pii_scrub": q54_pii_scrub,
-        "q55_stratified_sample": q55_stratified_sample,
         "q56_transcript_lint": q56_transcript_lint,
         "q57_cross_corpus_dedup": q57_cross_corpus_dedup,
         "q58_source_profile": q58_source_profile,
@@ -2170,7 +2008,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q60_cluster_size_histogram": q60_cluster_size_histogram,
         "q61_blocking_quality": q61_blocking_quality,
         "q62_sorted_neighborhood_pairs": q62_sorted_neighborhood_pairs,
-        "q63_tfidf_cosine_pairs": q63_tfidf_cosine_pairs,
         "q64_fs_em_linkage": q64_fs_em_linkage,
         "q65_golden_records": q65_golden_records,
         "q66_cluster_eval": q66_cluster_eval,
@@ -2193,15 +2030,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q83_linkage_waterfall": q83_linkage_waterfall,
         "q28_cc_exact_clusters": q28_cc_exact_clusters,
         "q29_incremental_cc": q29_incremental_cc,
-        "q30_cosine_topk": q30_cosine_topk,
         "q31_embedding_neardup": q31_embedding_neardup,
         "q32_sniff_media_type": q32_sniff_media_type,
         "q33_aac_policy_keys": q33_aac_policy_keys,
         "q34_chunk_minhash_pairs": q34_chunk_minhash_pairs,
         "q34_fast_chunk_minhash_pairs": q34_fast_chunk_minhash_pairs,
-        "q35_bucketed_ann_topk": q35_bucketed_ann_topk,
-        "q35b_ann_multiprobe": q35b_ann_multiprobe,
-        "q39_ivf_ann_topk": q39_ivf_ann_topk,
         "q36_jaro_winkler_pairs": q36_jaro_winkler_pairs,
         "q37_dedup_keep_best": q37_dedup_keep_best,
         "q38_corpus_dedup_stats": q38_corpus_dedup_stats,
@@ -2656,34 +2489,6 @@ FROM customer JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY CUBE (r_name, c_mktsegment)
 """,
-        "q17_asof_join": """
-SELECT o_orderkey, last_event_id FROM (
-  SELECT o.o_orderkey,
-         e.event_id AS last_event_id,
-         row_number() OVER (PARTITION BY o.o_orderkey
-                            ORDER BY e.ts DESC, e.event_id DESC) AS rn
-  FROM orders o LEFT JOIN events e
-    ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
-) WHERE rn = 1
-""",
-        "q17b_asof_join_pandas": """
-SELECT o_orderkey, last_event_id FROM (
-  SELECT o.o_orderkey,
-         e.event_id AS last_event_id,
-         row_number() OVER (PARTITION BY o.o_orderkey
-                            ORDER BY e.ts DESC, e.event_id DESC) AS rn
-  FROM orders o LEFT JOIN events e
-    ON e.user_id = o.o_custkey AND e.ts <= o.o_orderdate
-) WHERE rn = 1
-""",
-        "q18_range_join": """
-SELECT o.o_orderkey, count(e.user_id) AS n_in_range
-FROM orders o LEFT JOIN events e
-  ON e.user_id = o.o_custkey
- AND epoch_ms(e.ts) >= epoch_ms(o.o_orderdate)
- AND epoch_ms(e.ts) <  epoch_ms(o.o_orderdate) + 604800000
-GROUP BY o.o_orderkey
-""",
         "q19_multiway_join": """
 SELECT n_name,
        round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -2894,161 +2699,7 @@ r AS (SELECT *, row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, toke
 SELECT doc_id, rank::INT AS rank, token, tf, round(tfidf, 6) AS tfidf
 FROM r WHERE rank <= 3
 """,
-        "q52_semantic_dedup": """
-WITH c AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM embeddings ORDER BY vec_id LIMIT 8
-),
-a AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY list_cosine_similarity(e.embedding, c.cv) DESC,
-                                     c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM a WHERE rn = 1),
-p AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-         list_cosine_similarity(x.embedding, y.embedding) AS cos
-  FROM cells x JOIN cells y ON x.cell = y.cell AND x.vec_id != y.vec_id
-),
-per AS (
-  SELECT id_a,
-         sum(CASE WHEN cos >= 0.4 THEN 1 ELSE 0 END)::BIGINT AS n_dups,
-         max(CASE WHEN cos >= 0.4 AND id_b < id_a THEN 1 ELSE 0 END) AS hld
-  FROM p GROUP BY id_a
-)
-SELECT cl.vec_id, cl.cell,
-       coalesce(n_dups, 0)::BIGINT AS n_dups,
-       coalesce(hld, 0) = 0 AS keep
-FROM cells cl LEFT JOIN per ON cl.vec_id = per.id_a
-""",
-        "q53_curate": f"""
-WITH f AS (
-    SELECT doc_id,
-           length(text) AS n_chars,
-           regexp_split_to_array(trim(text), '\\s+') AS toks,
-           (length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')))
-               / greatest(length(text), 1) AS punct_ratio,
-           ({stop_sum}) / greatest(array_length(regexp_split_to_array(trim(text), '\\s+')), 1)
-               AS stopword_ratio,
-           {lang_scores['en']} AS s_en,
-           {lang_scores['de']} AS s_de,
-           {lang_scores['fr']} AS s_fr,
-           {lang_scores['es']} AS s_es
-    FROM documents WHERE doc_id % 20 != 0
-),
-g2 AS (
-    SELECT *, len(toks) AS n_words,
-           CASE WHEN len(toks) > 0
-                THEN len(list_distinct(toks))::DOUBLE / len(toks) ELSE 0.0 END AS uniq_frac,
-           CASE WHEN len(toks) >= 2
-                THEN 1.0 - len(list_distinct(list_transform(range(1, len(toks)),
-                         i -> toks[i] || ' ' || toks[i+1])))::DOUBLE / (len(toks) - 1)
-                ELSE 0.0 END AS dup_2gram,
-           greatest(s_en, s_de, s_fr, s_es) AS b
-    FROM f
-),
-funnel AS (
-    SELECT doc_id,
-       CASE WHEN n_words < 10 THEN 'too_short'
-            WHEN n_chars > 20000 THEN 'too_long'
-            WHEN stopword_ratio < 0.05 THEN 'low_stopword'
-            WHEN punct_ratio > 0.2 THEN 'high_punct'
-            WHEN dup_2gram > 0.3 OR uniq_frac < 0.3 THEN 'repetitive'
-            WHEN (CASE WHEN s_en = b THEN 'en' WHEN s_de = b THEN 'de'
-                       WHEN s_fr = b THEN 'fr' ELSE 'es' END) != 'en' THEN 'non_english'
-            ELSE 'keep' END AS verdict
-    FROM g2
-),
-surv AS (
-    SELECT d.doc_id, d.text FROM documents d
-    JOIN funnel USING (doc_id) WHERE funnel.verdict = 'keep'
-),
-fpt AS (SELECT doc_id, text, md5({_NORM_SQL.format(c='text')}) AS fp FROM surv),
-canonfp AS (SELECT fp, min(doc_id) AS canon_id FROM fpt GROUP BY fp),
-ex AS (
-    SELECT f2.doc_id, f2.text, (f2.doc_id != c2.canon_id) AS is_exact_dup
-    FROM fpt f2 JOIN canonfp c2 USING (fp)
-),
-canon AS (SELECT doc_id, text FROM ex WHERE NOT is_exact_dup),
-cnorm AS (SELECT doc_id, {_NORM_SQL.format(c='text')} AS t FROM canon),
-ctok AS (SELECT doc_id, string_split(t, ' ') AS toks FROM cnorm),
-ctokidx AS (
-    SELECT doc_id, toks,
-           unnest(generate_series(1, greatest(array_length(toks) - 2, 1))) AS i
-    FROM ctok
-),
-cgrams AS (
-    SELECT DISTINCT doc_id, array_to_string(list_slice(toks, i, i + 2), ' ') AS g
-    FROM ctokidx
-),
-mins AS (SELECT doc_id, {perms53} FROM cgrams GROUP BY doc_id),
-keys AS (SELECT doc_id, unnest([{bands53}]) AS band_key FROM mins),
-cand AS (
-    SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-    FROM keys a JOIN keys b ON a.band_key = b.band_key AND a.doc_id < b.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM cgrams GROUP BY doc_id),
-inter AS (
-    SELECT c3.id_a, c3.id_b, count(*) AS n_inter
-    FROM cand c3
-    JOIN cgrams ga ON ga.doc_id = c3.id_a
-    JOIN cgrams gb ON gb.doc_id = c3.id_b AND gb.g = ga.g
-    GROUP BY c3.id_a, c3.id_b
-),
-near AS (
-    SELECT DISTINCT id_b AS doc_id FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE n_inter / (sa.sz + sb.sz - n_inter) >= 0.6
-),
-tg8 AS (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(toks) >= 8
-           THEN list_transform(range(0, len(toks) - 7),
-                  i -> array_to_string(toks[i+1 : i+8], ' '))
-           ELSE [array_to_string(toks, ' ')] END)) AS g8
-    FROM ctok
-),
-bnorm AS (SELECT doc_id, {_NORM_SQL.format(c='text')} AS t
-          FROM documents WHERE doc_id % 20 = 0),
-btok AS (SELECT doc_id, string_split(t, ' ') AS toks FROM bnorm),
-bg8 AS (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(toks) >= 8
-           THEN list_transform(range(0, len(toks) - 7),
-                  i -> array_to_string(toks[i+1 : i+8], ' '))
-           ELSE [array_to_string(toks, ' ')] END)) AS g8
-    FROM btok
-),
-cpairs AS (
-    SELECT t.doc_id FROM tg8 t JOIN bg8 b2 USING (g8)
-    GROUP BY t.doc_id, b2.doc_id HAVING count(*) >= 3
-),
-contam AS (SELECT DISTINCT doc_id FROM cpairs)
-SELECT fu.doc_id,
-       CASE WHEN fu.verdict != 'keep' THEN fu.verdict
-            WHEN ex.is_exact_dup THEN 'exact_dup'
-            WHEN ne.doc_id IS NOT NULL THEN 'near_dup'
-            WHEN co.doc_id IS NOT NULL THEN 'contaminated'
-            ELSE 'keep' END AS verdict
-FROM funnel fu
-LEFT JOIN ex ON ex.doc_id = fu.doc_id
-LEFT JOIN near ne ON ne.doc_id = fu.doc_id
-LEFT JOIN contam co ON co.doc_id = fu.doc_id
-""",
         "q54_pii_scrub": _pii_oracle_sql(),
-        "q55_stratified_sample": """
-SELECT doc_id, lang FROM documents
-WHERE substr(md5(doc_id::VARCHAR), 1, 8) <
-      CASE lang WHEN 'en' THEN '80000000'
-                WHEN 'de' THEN '40000000'
-                WHEN 'fr' THEN '40000000'
-                WHEN 'es' THEN '20000000'
-                WHEN 'zh' THEN '10000000'
-                ELSE '00000000' END
-""",
         "q56_transcript_lint": _lint_oracle_sql(),
         "q57_cross_corpus_dedup": _cross_corpus_oracle_sql(),
         "q59_threshold_sweep": f"""
@@ -3106,39 +2757,6 @@ r AS (
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        CAST(b.rank - a.rank AS INT) AS rank_gap
 FROM r a JOIN r b ON b.rank - a.rank BETWEEN 1 AND 2
-""",
-        "q63_tfidf_cosine_pairs": """
-WITH tok AS (
-  SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\\s+')) AS token
-  FROM documents
-),
-tf AS (SELECT doc_id AS id, token, count(*)::BIGINT AS tf FROM tok GROUP BY 1, 2),
-dfq AS (SELECT token, count(*)::BIGINT AS df_t FROM tf GROUP BY token),
-n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-w AS (
-  SELECT id, token, tf * ln(n_docs::DOUBLE / df_t) AS w
-  FROM tf JOIN dfq USING (token) CROSS JOIN n
-),
-norms AS (SELECT id, sqrt(sum(w * w)) AS nrm FROM w GROUP BY id),
-pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-),
-dots AS (
-  SELECT p.id_a, p.id_b, sum(wa.w * wb.w) AS dot
-  FROM pairs p
-  JOIN w wa ON wa.id = p.id_a
-  JOIN w wb ON wb.id = p.id_b AND wb.token = wa.token
-  GROUP BY p.id_a, p.id_b
-)
-SELECT p.id_a, p.id_b,
-       round(CASE WHEN na.nrm > 0 AND nb.nrm > 0
-                  THEN coalesce(dots.dot, 0) / (na.nrm * nb.nrm)
-                  ELSE 0 END, 6) AS tfidf_cosine
-FROM pairs p
-LEFT JOIN dots USING (id_a, id_b)
-JOIN norms na ON na.id = p.id_a
-JOIN norms nb ON nb.id = p.id_b
 """,
         "q64_fs_em_linkage": _fs_em_oracle(),
         "q65_golden_records": f"""
@@ -3541,37 +3159,6 @@ SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS cluster_id FROM fp
 WITH fp AS (SELECT doc_id, md5({_NORM_SQL.format(c='text')}) AS fp FROM documents)
 SELECT doc_id, min(doc_id) OVER (PARTITION BY fp) AS cluster_id FROM fp
 """,
-        "q30_cosine_topk": """
-WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 5),
-s AS (
-    SELECT q.qid AS query_id, e.vec_id AS neighbor_id,
-           list_cosine_similarity(e.embedding, q.qv) AS cosine
-    FROM embeddings e, q WHERE e.vec_id != q.qid
-)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM s) WHERE rank <= 5
-""",
-        "q35_bucketed_ann_topk": f"""
-WITH b AS (
-  SELECT vec_id, embedding,
-         {_bucket_sql(3)} AS bucket
-  FROM embeddings
-),
-q AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM b WHERE vec_id < 5),
-s AS (
-    SELECT q.qid AS query_id, b.vec_id AS neighbor_id,
-           list_cosine_similarity(b.embedding, q.qv) AS cosine
-    FROM b JOIN q ON b.bucket = q.bucket AND b.vec_id != q.qid
-)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM s) WHERE rank <= 5
-""",
         "q36_jaro_winkler_pairs": """
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        round(jaro_winkler_similarity(substr(a.text, 1, 256),
@@ -3623,65 +3210,6 @@ SELECT source,
        round((sum(org_chars) - sum(kept_chars))::BIGINT
              / greatest(sum(org_chars)::BIGINT, 1), 6) AS dedup_ratio
 FROM pf GROUP BY source
-""",
-        "q35b_ann_multiprobe": f"""
-WITH b AS (
-  SELECT vec_id, embedding,
-         {_bucket_sql(3)} AS bucket
-  FROM embeddings
-),
-q0 AS (SELECT vec_id AS qid, embedding AS qv, bucket FROM b WHERE vec_id < 5),
-qb AS (
-    SELECT qid, qv, unnest([
-        bucket,
-        (CASE substr(bucket, 1, 1) WHEN '1' THEN '0' ELSE '1' END) || substr(bucket, 2, 2),
-        substr(bucket, 1, 1) || (CASE substr(bucket, 2, 1) WHEN '1' THEN '0' ELSE '1' END) || substr(bucket, 3, 1),
-        substr(bucket, 1, 2) || (CASE substr(bucket, 3, 1) WHEN '1' THEN '0' ELSE '1' END)
-    ]) AS bucket
-    FROM q0
-),
-s AS (
-    SELECT qb.qid AS query_id, b.vec_id AS neighbor_id,
-           list_cosine_similarity(b.embedding, qb.qv) AS cosine
-    FROM b JOIN qb ON b.bucket = qb.bucket AND b.vec_id != qb.qid
-)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM s) WHERE rank <= 5
-""",
-        "q39_ivf_ann_topk": """
-WITH c AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, embedding AS cv
-  FROM embeddings ORDER BY vec_id LIMIT 8
-),
-a AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY list_cosine_similarity(e.embedding, c.cv) DESC,
-                                     c.cid ASC) AS rn
-  FROM embeddings e CROSS JOIN c
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM a WHERE rn = 1),
-qp AS (
-  SELECT e.vec_id AS qid, e.embedding AS qv, c.cid AS cell,
-         row_number() OVER (PARTITION BY e.vec_id
-                            ORDER BY list_cosine_similarity(e.embedding, c.cv) DESC,
-                                     c.cid ASC) AS pr
-  FROM embeddings e CROSS JOIN c WHERE e.vec_id < 5
-),
-probes AS (SELECT qid, qv, cell FROM qp WHERE pr <= 2),
-s AS (
-  SELECT p.qid AS query_id, v.vec_id AS neighbor_id,
-         list_cosine_similarity(v.embedding, p.qv) AS cosine
-  FROM cells v JOIN probes p ON v.cell = p.cell AND v.vec_id != p.qid
-)
-SELECT query_id, neighbor_id, rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM s) WHERE rank <= 5
 """,
         "q31_embedding_neardup": f"""
 WITH bkt AS (

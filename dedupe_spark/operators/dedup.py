@@ -9,8 +9,7 @@ document table ``(id, text)``:
                            (reference C2/C3 generalization)
   * SimHash              — bitwise majority of token-hash bits
   * n-gram Jaccard       — token n-gram overlap join
-  * embedding cosine     — near-dup by vector similarity (see
-                           operators/similarity.py for ANN)
+  * embedding cosine     — near-dup by vector similarity
 
 The md5-string variants here are **oracle-exact**: Spark's ``md5`` and
 DuckDB's ``md5`` produce identical lowercase hex, and the lexicographic
@@ -351,23 +350,6 @@ def _passages_from_toks(toks: Column, window: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def passage_hashes(text: Column, window: int = 16) -> Column:
-    """md5 per consecutive non-overlapping ``window``-token passage.
-
-    The scalable stand-in for suffix-array exact-substring dedup
-    (Lee et al. 2022, "Deduplicating Training Data Makes Language
-    Models Better", public): fixed token windows hash-grouped
-    corpus-wide find every duplicated span >= 2*window-1 tokens.
-    Documents shorter than one window contribute no passages. Pure
-    codegen'd array exprs; the reference's analog is FSP chunking
-    (fixed 4096-B blocks, /root/reference/src/deduplication.cpp:22),
-    re-cut at token granularity.
-
-    Column-level form (re-tokenizes per window when inlined under a
-    HOF); hot paths go through ``passage_rows`` instead."""
-    return _passages_from_toks(F.split(normalize_expr(text), " "), window)
-
-
 def passage_rows(
     df: DataFrame, id_col: str, text_col: str, window: int = 16
 ) -> DataFrame:
@@ -643,27 +625,6 @@ def _jaccard_for_candidates(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def ngram_jaccard_on_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Exact n-gram Jaccard verification restricted to candidate pairs.
-
-    This is the candidates-first ordering of the reference's probe →
-    verify flow (src/deduplication.cpp:1405-1417): the quadratic gram
-    join never runs — intersections are counted only for rows of
-    ``pairs`` (e.g. MinHash/LSH candidates), so the cost is
-    O(|pairs| * doc_size), not O(docs sharing any gram)^2.
-    """
-    grams = gram_rows(df, id_col, text_col, n)
-    sizes = grams.groupBy("id").agg(F.count("*").alias("sz"))
-    return _jaccard_for_candidates(grams, sizes, pairs.select("id_a", "id_b"), threshold)
 
 
 def ngram_jaccard_pairs_prefix(

@@ -204,20 +204,3 @@ def with_minhash_bands(
     if keep_shingles:
         out = out.withColumn("sh", F.array_distinct("_shingles"))
     return out.drop("_th", "_shingles", "_sig")
-
-
-def minhash_signature_py(tokens: list[str], k: int = 3, num_perm: int = DEFAULT_NUM_PERM, seed: int = DEFAULT_SEED) -> np.ndarray:
-    """Pure-python/numpy reference implementation for tests (no Spark).
-
-    NOTE: uses python's xxhash-free path — tests compare *pipeline*
-    signatures for determinism/similarity properties, not this exact
-    value, because shingle hashing lives JVM-side (xxhash64).
-    """
-    a, b = _perm_params(num_perm, seed)
-    if len(tokens) >= k:
-        shingles = {" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)}
-    else:
-        shingles = {" ".join(tokens)}
-    hs = np.array([np.uint64(hash(s) & 0xFFFFFFFFFFFFFFFF) for s in shingles], dtype=np.uint64)
-    m = hs[:, None] * a[None, :] + b[None, :]
-    return m.min(axis=0).astype(np.int64)

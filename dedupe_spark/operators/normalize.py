@@ -26,11 +26,6 @@ def norm_text(col: Column | str) -> Column:
     return F.trim(c)
 
 
-def with_norm_and_fp(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add ``norm`` (normalized text) and ``fp`` (md5 hex of norm)."""
-    return df.withColumn("norm", norm_text(text_col)).withColumn("fp", F.md5(F.col("norm")))
-
-
 def conversation_docs(df: DataFrame) -> DataFrame:
     """Collapse turns into one document row per conversation.
 

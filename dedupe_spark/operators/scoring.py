@@ -487,90 +487,6 @@ def _fs_banded_decision(scored: DataFrame, in_band, deps: list | None = None) ->
     )
 
 
-def tfidf_cosine_on_pairs(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """TF-IDF cosine similarity computed only on the given candidate pairs.
-
-    The fourth classic record-linkage scorer next to the Jaccard /
-    Levenshtein / Jaro-Winkler deciders above (Cohen, "Integration of
-    heterogeneous databases without common domains using queries based
-    on textual similarity", SIGMOD 1998): token overlap weighted by
-    corpus rarity, so boilerplate tokens that every transcript shares
-    (greetings, tool preambles) contribute ~nothing while rare tokens
-    dominate — exactly the failure mode unweighted shingle Jaccard has
-    on tool-heavy conversations (the aac_policy motivation, SURVEY C4).
-
-    Candidates-first shape, like ``ngram_jaccard_on_pairs``: weights are
-    an explode + two map-side-combinable hash aggregates over the
-    corpus; the dot product joins the pair list against the weight
-    table per side (keyed on id, then (id, token)), so the quadratic
-    all-pairs space is never materialized and the intermediate is
-    O(pairs x tokens-per-doc). Corpus size N enters as a broadcast
-    1-row aggregate, not a driver collect — one lazy DAG. Pairs with no
-    shared tokens (or a zero-norm side, every token at idf 0) get
-    cosine 0, not null.
-
-    Output: (id_a, id_b, tfidf_cosine).
-    """
-    # outer + not-null: see blocking.explode_blocks (the inferred size>0
-    # filter would run the regex split twice per row)
-    toks = F.explode_outer(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
-    tf = (
-        docs.select(F.col(id_col).alias("id"), toks)
-        .where(F.col("token").isNotNull())
-        .groupBy("id", "token")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    docfreq = tf.groupBy("token").agg(F.count("*").cast("long").alias("df_t"))
-    n_docs = docs.select(F.col(id_col)).distinct().agg(F.count("*").alias("n_docs"))
-    weights = (
-        tf.join(docfreq, "token")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "id",
-            "token",
-            (F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df_t"))).alias("w"),
-        )
-    )
-    norms = weights.groupBy("id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-
-    p = pairs.select("id_a", "id_b")
-    wa = weights.select(F.col("id").alias("id_a"), "token", F.col("w").alias("wa"))
-    wb = weights.select(F.col("id").alias("id_b"), "token", F.col("w").alias("wb"))
-    dots = (
-        p.join(wa, "id_a")
-        .join(wb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-    )
-    na = norms.select(F.col("id").alias("id_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("id").alias("id_b"), F.col("nrm").alias("nb"))
-    # norms joins are LEFT: a side with NULL/empty text (or an id absent
-    # from docs) has no norms row, and an inner join would silently drop
-    # the pair instead of honoring the documented cosine-0 contract —
-    # the missing norm falls through the (na > 0) guard to 0.0
-    return (
-        p.join(dots, ["id_a", "id_b"], "left")
-        .join(na, "id_a", "left")
-        .join(nb, "id_b", "left")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.when(
-                    (F.col("na") > 0) & (F.col("nb") > 0),
-                    F.coalesce(F.col("dot"), F.lit(0.0)) / (F.col("na") * F.col("nb")),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("tfidf_cosine"),
-        )
-    )
-
-
 def monge_elkan_batch(
     a_tok_lists: list[list[str]], b_tok_lists: list[list[str]]
 ) -> np.ndarray:

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dedupe_spark.catalog import SnapshotCatalog
@@ -308,6 +308,51 @@ def _strip_side(col: str) -> Column:
     return F.substring(F.col(col), len(_SIDE_A) + 1, 2**30).alias(col)
 
 
+def _assign_links(exact: DataFrame, scored: DataFrame, mode: str) -> DataFrame:
+    """Links from exact pairs ``(id_a, id_b)`` and the accepted scored
+    pairs, assigned per ``mode`` (see ``PipelineConfig.link_mode``), as
+    ``(conv_id_a, conv_id_b, score, link_type)`` with side tags stripped.
+    Exact links carry score 2.0 so they outrank any fuzzy score."""
+    exact_links = exact.select(
+        "id_a", "id_b", F.lit(2.0).alias("score"), F.lit("exact").alias("link_type")
+    )
+    near_links = scored.where("is_dup").select(
+        "id_a", "id_b", F.col("jaccard").cast("double").alias("score"),
+        F.lit("near").alias("link_type"),
+    )
+    if mode == "one_to_one":
+        # exact links are 1:1 by rank-zip construction and outrank any
+        # fuzzy score; reciprocal-best runs on the residual records only.
+        # (Reciprocal-best must NOT see the zip-ranked exact pairs: its
+        # smaller-partner tie-break would keep only each group's first
+        # rank and drop the rest of a perfectly valid 1:1 assignment.)
+        residual = (
+            near_links.join(exact_links.select("id_a"), "id_a", "left_anti")
+            .join(exact_links.select("id_b"), "id_b", "left_anti")
+        )
+        from dedupe_spark.operators.linkage import reciprocal_best_links
+
+        links = exact_links.unionByName(
+            reciprocal_best_links(residual, "id_a", "id_b", "score")
+        )
+    elif mode == "many_to_one":
+        w = Window.partitionBy("id_a").orderBy(F.col("score").desc(), F.col("id_b").asc())
+        links = (
+            exact_links.unionByName(near_links)
+            .withColumn("_r", F.row_number().over(w))
+            .where(F.col("_r") == 1)
+            .drop("_r")
+        )
+    else:
+        links = exact_links.unionByName(near_links)
+    return links.select(
+        _strip_side("id_a").alias("conv_id_a"),
+        _strip_side("id_b").alias("conv_id_b"),
+        "score",
+        "link_type",
+    )
+
+
 def link(
     transcripts_a: DataFrame,
     transcripts_b: DataFrame,
@@ -401,47 +446,9 @@ def link(
         min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
         decider=cfg.decider, sh_col="sh", deps=persisted,
     )
-    near = scored.where("is_dup").select(
-        "id_a", "id_b", F.col("jaccard").cast("double").alias("score")
-    )
 
     # 5. assignment
-    exact_links = exact.select(
-        "id_a", "id_b", F.lit(2.0).alias("score"), F.lit("exact").alias("link_type")
-    )
-    near_links = near.select("id_a", "id_b", "score", F.lit("near").alias("link_type"))
-    if cfg.link_mode == "one_to_one":
-        # exact links are 1:1 by rank-zip construction and outrank any
-        # fuzzy score; reciprocal-best runs on the residual records only.
-        # (Reciprocal-best must NOT see the zip-ranked exact pairs: its
-        # smaller-partner tie-break would keep only each group's first
-        # rank and drop the rest of a perfectly valid 1:1 assignment.)
-        residual = (
-            near_links.join(exact_links.select("id_a"), "id_a", "left_anti")
-            .join(exact_links.select("id_b"), "id_b", "left_anti")
-        )
-        from dedupe_spark.operators.linkage import reciprocal_best_links
-
-        links = exact_links.unionByName(
-            reciprocal_best_links(residual, "id_a", "id_b", "score")
-        )
-    elif cfg.link_mode == "many_to_one":
-        w = Window.partitionBy("id_a").orderBy(F.col("score").desc(), F.col("id_b").asc())
-        links = (
-            exact_links.unionByName(near_links)
-            .withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") == 1)
-            .drop("_r")
-        )
-    else:
-        links = exact_links.unionByName(near_links)
-
-    links = links.select(
-        _strip_side("id_a").alias("conv_id_a"),
-        _strip_side("id_b").alias("conv_id_b"),
-        "score",
-        "link_type",
-    )
+    links = _assign_links(exact, scored, cfg.link_mode)
 
     if cfg.compute_metrics or catalog is not None:
         # the links DAG is read up to three times below (n_links metric,
@@ -472,7 +479,7 @@ def link(
     # every exposed frame speaks the caller's id namespace: the internal
     # side tags are stripped from ids on ALL outputs, not just links
     # (note: ids come back as strings — _tag_side stringifies non-string
-    # conv_ids; q82 casts back where the source ids were numeric)
+    # conv_ids; callers cast back where the source ids were numeric)
     result = LinkResult(
         links=links,
         scored_pairs=scored.withColumn("id_a", _strip_side("id_a")).withColumn(
@@ -592,19 +599,15 @@ def link_incremental(
     ndocs = _docs_with_bands(_tag_side(new_probe, _SIDE_A), cfg).persist()
     persisted.append(ndocs)
 
-    def _tag_b(df: DataFrame, col: str = "conv_id") -> DataFrame:
-        return df.withColumn(col, F.concat(F.lit(_SIDE_B), F.col(col)))
-
-    # static partition pruning, same rationale as the registry probe:
-    # DPP cannot see through the batch side (lifecycle.bucket_pruned)
-    _bucket_prune = lifecycle.bucket_pruned
-
     # 2. exact links against the committed fp index
     new_idx = _with_key_bucket(
         ndocs.select("conv_id", "exact_fp"), "exact_fp"
     ).persist()
     persisted.append(new_idx)
-    reg_idx = _bucket_prune(
+    # every registry table is read with static partition pruning, same
+    # rationale as the registry probe: DPP cannot see through the batch
+    # side (lifecycle.bucket_pruned)
+    reg_idx = lifecycle.bucket_pruned(
         catalog.read("link_registry_index"), "key_bucket", new_idx
     ).join(
         new_idx.select("key_bucket", "exact_fp").distinct(),
@@ -629,7 +632,7 @@ def link_incremental(
     ).persist()
     persisted.append(nblocks)
     reg_blocks = (
-        _bucket_prune(catalog.read("link_registry_blocks"), "key_bucket", nblocks)
+        lifecycle.bucket_pruned(catalog.read("link_registry_blocks"), "key_bucket", nblocks)
         .join(
             nblocks.select("key_bucket", "band_key").distinct(),
             ["key_bucket", "band_key"],
@@ -641,7 +644,7 @@ def link_incremental(
     # the scoring plan, and the links write — one execution, not three
     cands = blocking.cross_candidate_pairs(
         nblocks.select("band_key", F.col("id")),
-        _tag_b(reg_blocks, "conv_id").select("band_key", F.col("conv_id").alias("id")),
+        _tag_side(reg_blocks, _SIDE_B).select("band_key", F.col("conv_id").alias("id")),
         max_block=cfg.max_block,
         salt_threshold=cfg.salt_threshold,
         salt_groups=cfg.salt_groups,
@@ -660,44 +663,21 @@ def link_incremental(
     ).persist()
     persisted.append(pair_b_idx)
     reg_docs = (
-        _bucket_prune(catalog.read("link_registry_docs"), "id_bucket", pair_b_idx)
+        lifecycle.bucket_pruned(catalog.read("link_registry_docs"), "id_bucket", pair_b_idx)
         .join(pair_b_idx.select("conv_id"), "conv_id", "left_semi")
     )
     scoring_docs = ndocs.select("conv_id", "doc", "doc_len", "sh").unionByName(
-        _tag_b(reg_docs).select("conv_id", "doc", "doc_len", "sh")
+        _tag_side(reg_docs, _SIDE_B).select("conv_id", "doc", "doc_len", "sh")
     )
     scored = scoring.score_pairs(
         cands, scoring_docs,
         min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
         decider=cfg.decider, sh_col="sh", deps=persisted,
     )
-    near = scored.where("is_dup").select(
-        "id_a", "id_b", F.col("jaccard").cast("double").alias("score")
-    )
 
     # 5. batch-local assignment (valid globally: each probe record
     # appears in exactly one batch)
-    exact_links = exact.select(
-        "id_a", "id_b", F.lit(2.0).alias("score"), F.lit("exact").alias("link_type")
-    )
-    near_links = near.select("id_a", "id_b", "score", F.lit("near").alias("link_type"))
-    if cfg.link_mode == "many_to_one":
-        w = Window.partitionBy("id_a").orderBy(F.col("score").desc(), F.col("id_b").asc())
-        links = (
-            exact_links.unionByName(near_links)
-            .withColumn("_r", F.row_number().over(w))
-            .where(F.col("_r") == 1)
-            .drop("_r")
-        )
-    else:
-        links = exact_links.unionByName(near_links)
-
-    links = links.select(
-        _strip_side("id_a").alias("conv_id_a"),
-        _strip_side("id_b").alias("conv_id_b"),
-        "score",
-        "link_type",
-    ).persist()
+    links = _assign_links(exact, scored, cfg.link_mode).persist()
     persisted.append(links)
 
     # 6. O(delta) append + refreshed metrics snapshot (the committed
@@ -825,8 +805,6 @@ def current_clusters(catalog: SnapshotCatalog) -> DataFrame:
     rows — O(delta) per commit — so the read view must pick each
     conv_id's newest assignment; ``compact_clusters`` folds the log back
     into the base table when it grows."""
-    from pyspark.sql import Window
-
     base = catalog.read("clusters").select(
         "conv_id", "cluster_id", F.lit(0).alias("_v")
     )

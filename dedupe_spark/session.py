@@ -13,11 +13,22 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Shuffle partitions: ~2-3x total cores is the classic rule; in this
-# sandbox we match the driver-advertised CPU count. At 100 TB you would
-# raise this to O(10k) and let AQE coalesce — AQE is on, so the static
-# number only sets the upper bound before runtime coalescing.
-_DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Cores this process may run on; ``SPARK_GRAFT_CPUS`` overrides."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory(cpus: int) -> str:
+    """Driver heap sized to the machine: 768 MB per core, at most a third
+    of the memory available now, at least 1 GB. ``SPARK_GRAFT_DRIVER_MEM``
+    overrides."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        avail_kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    return f"{max(1024, min(768 * cpus, avail_kb // 1024 // 3))}m"
 
 
 def build_session(
@@ -27,8 +38,12 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Create (or fetch) a SparkSession tuned for the dedupe pipeline."""
-    cpus = _DEFAULT_CPUS
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
+    # Shuffle partitions: ~2-3x total cores is the classic rule; here we
+    # match the core count. At 100 TB you would raise this to O(10k) and
+    # let AQE coalesce — AQE is on, so the static number only sets the
+    # upper bound before runtime coalescing.
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
 
     # Shuffle spill/block files on tmpfs: this sandbox's disk is slow
@@ -56,7 +71,7 @@ def build_session(
         # --- shuffle / memory ---
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory(cpus))
         .config("spark.driver.maxResultSize", "4g")
         # --- Arrow: every pandas UDF crossing is Arrow-batched ---
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

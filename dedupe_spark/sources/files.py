@@ -12,7 +12,6 @@ always explicit (schemas.py): no inference, fail fast on drift.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dedupe_spark import schemas
 
@@ -30,25 +29,3 @@ def read_transcript_dir(spark: SparkSession, path: str, fmt: str = "parquet") ->
     if fmt == "json":
         return reader.json(path)
     raise ValueError(f"unsupported transcript format: {fmt}")
-
-
-def read_media_dir(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:
-    """Opaque binary ingestion via the ``binaryFile`` source — the
-    multimodal analog of register_dir: every file becomes one row
-    (media_id, payload, media_type, src_path) with the media type
-    sniffed from magic bytes (operators/multimodal.py), exactly the
-    reference's FileType dispatch (src/FileType.cpp:24-56) at scan time.
-    """
-    from dedupe_spark.operators.multimodal import sniff_media_type
-
-    reader = spark.read.format("binaryFile").option("recursiveFileLookup", "true")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    df = reader.load(path)
-    return df.select(
-        F.xxhash64("path").alias("media_id"),
-        F.col("content").alias("payload"),
-        sniff_media_type(F.col("content")).alias("media_type"),
-        F.col("path").alias("src_path"),
-        F.col("length").alias("n_bytes"),
-    )

@@ -1,20 +1,16 @@
-"""Structured Streaming ingestion + streaming dedup.
+"""Structured Streaming ingestion.
 
 The reference is strictly batch (SURVEY.md §2.6) — this module is the
-capability a transcript pipeline needs on top: continuously ingest new
-turns, fingerprint them, drop duplicates within a watermark, and emit
-per-window dedup metrics. Patterns:
+capability a transcript pipeline needs on top:
 
   * ``readStream`` over a parquet/Iceberg directory (files appear ->
-    micro-batch)
-  * ``withWatermark`` + ``dropDuplicatesWithinWatermark`` for exact
-    streaming dedup with bounded state (the streaming analog of the
-    unique-turn registry — state eviction replaces the reference's LRU
-    cache swap-out, /root/reference/src/HashDB.cpp:463-674)
-  * windowed aggregation for dedup-rate metrics with late-data handling
+    micro-batch), each micro-batch registered with the same incremental
+    registry code as batch ingest (``stream_register_turns``)
+  * stateful sessionization across micro-batches
+    (``stream_sessionize``, ``applyInPandasWithState``)
 
-Tests drive these with file sources + ``processAllAvailable`` (the
-public synchronous-smoke pattern), no external broker needed.
+Tests drive these with file sources and an ``availableNow`` trigger, no
+external broker needed.
 """
 
 from __future__ import annotations
@@ -22,11 +18,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dedupe_spark import schemas
-from dedupe_spark.operators.normalize import norm_text
 
 
 def read_transcript_stream(spark: SparkSession, path: str, max_files: int = 16) -> DataFrame:
@@ -35,44 +29,6 @@ def read_transcript_stream(spark: SparkSession, path: str, max_files: int = 16) 
         .option("maxFilesPerTrigger", max_files)
         .parquet(path)
     )
-
-
-def streaming_unique_turns(stream: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Fingerprint each turn and drop duplicate fingerprints arriving
-    within the watermark — bounded-state exact dedup."""
-    fp = stream.withColumn("fp", F.md5(norm_text("text")))
-    return fp.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["fp"])
-
-
-def windowed_turn_metrics(stream: DataFrame, window: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
-    """Per-window ingest metrics with late-data tolerance: turn counts,
-    distinct conversations, approximate distinct fingerprints."""
-    fp = stream.withColumn("fp", F.md5(norm_text("text")))
-    return (
-        fp.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "role")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.approx_count_distinct("conv_id").alias("n_convs"),
-            F.approx_count_distinct("fp").alias("n_unique_fp"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "role",
-            "n_turns",
-            "n_convs",
-            "n_unique_fp",
-        )
-    )
-
-
-def run_to_memory_sink(df: DataFrame, name: str, output_mode: str = "append"):
-    """Start the query against an in-memory sink and drain all available
-    input synchronously (test/smoke harness)."""
-    q = df.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
-    q.processAllAvailable()
-    return q
 
 
 def stream_register_turns(

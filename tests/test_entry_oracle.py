@@ -1,9 +1,10 @@
-"""Local replica of the driver's DuckDB-oracle harness.
+"""Operator parity and the ``entry()`` contract.
 
 For every entry in __spark_entry__.queries() with an oracle_sql(),
 run both on sf0.001 and compare row count + column names + values
-(order-insensitive, floats rounded). This is the same gate
-CORRECTNESS_r{N}.json applies at sf0.01.
+(order-insensitive, floats rounded). ``test_entry_smoke`` pins
+``entry(spark)``: one ``(doc_id bigint, cluster_id bigint)`` row per
+sf0.001 document.
 """
 
 from __future__ import annotations
@@ -73,8 +74,14 @@ def test_query_matches_oracle(spark, duck, name):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
+N_DOCUMENTS = 500  # rows (and distinct doc_ids) in sf0.001 documents
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
-    rows = df.collect()
-    assert len(rows) > 0
     assert df.columns == ["doc_id", "cluster_id"]
+    assert [t for _, t in df.dtypes] == ["bigint", "bigint"]
+    rows = df.collect()
+    assert len(rows) == N_DOCUMENTS
+    assert len({r["doc_id"] for r in rows}) == N_DOCUMENTS
+    assert all(r["cluster_id"] is not None for r in rows)

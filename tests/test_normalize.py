@@ -2,7 +2,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dedupe_spark.operators.normalize import conversation_docs, norm_text, with_norm_and_fp
+from dedupe_spark.operators.normalize import conversation_docs, norm_text
 
 
 def test_norm_text(spark):
@@ -18,7 +18,7 @@ def test_fp_collides_for_equivalent_text(spark):
         [("a", 0, "user", "Hello World", None), ("b", 0, "user", "hello,  world!", None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.current_timestamp())
-    fps = [r["fp"] for r in with_norm_and_fp(df).collect()]
+    fps = [r["fp"] for r in df.select(F.md5(norm_text("text")).alias("fp")).collect()]
     assert fps[0] == fps[1]
 
 

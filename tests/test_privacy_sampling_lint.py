@@ -1,22 +1,14 @@
 """Unit tests for the round-4 curation operators: PII scrubbing
-(operators/privacy.py), deterministic hash sampling
-(operators/sampling.py), and transcript structural lint
+(operators/privacy.py) and transcript structural lint
 (operators/transcript_qa.py). The oracle parity of the corresponding
-q54/q55/q56 queries is covered by test_entry_oracle.py; these tests
-pin the operator-level invariants the oracle can't express."""
+q54/q56 queries is covered by test_entry_oracle.py; these tests pin
+the operator-level invariants the oracle can't express."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark.operators.privacy import PII_RULES, pii_scrub, redact_expr
-from dedupe_spark.operators.sampling import (
-    hash_sample,
-    hash_sample_fast,
-    rate_threshold_hex,
-    stratified_sample,
-)
 from dedupe_spark.operators.transcript_qa import transcript_lint
 
 
@@ -60,66 +52,6 @@ def test_pii_scrub_is_idempotent(spark):
 def test_pii_rules_have_distinct_tokens():
     tokens = [t for _, _, t in PII_RULES]
     assert len(set(tokens)) == len(tokens)
-
-
-# --------------------------------------------------------------- sampling
-
-
-def test_rate_threshold_hex_bounds():
-    assert rate_threshold_hex(0.0) == "00000000"
-    # rate 1.0 must be the identity sample: "g" sorts above every hex
-    # prefix, so even md5 prefix "ffffffff" passes the strict-< gate
-    assert rate_threshold_hex(1.0) == "g"
-    assert all(h < rate_threshold_hex(1.0) for h in ("00000000", "ffffffff"))
-    assert rate_threshold_hex(0.5) == "80000000"
-    with pytest.raises(ValueError):
-        rate_threshold_hex(1.5)
-
-
-@pytest.fixture(scope="module")
-def ids_df(spark):
-    return spark.range(0, 20_000).withColumnRenamed("id", "k").persist()
-
-
-def test_hash_sample_rate_and_determinism(spark, ids_df):
-    got = hash_sample(ids_df, "k", 0.25)
-    n = got.count()
-    assert abs(n / 20_000 - 0.25) < 0.02  # binomial 3-sigma ~ 0.009
-    # deterministic: same rows on a re-run and under different parallelism
-    a = sorted(r["k"] for r in got.collect())
-    b = sorted(r["k"] for r in hash_sample(ids_df.repartition(7), "k", 0.25).collect())
-    assert a == b
-
-
-def test_hash_sample_seeds_are_independent(spark, ids_df):
-    a = set(r["k"] for r in hash_sample(ids_df, "k", 0.2, seed="s1").collect())
-    b = set(r["k"] for r in hash_sample(ids_df, "k", 0.2, seed="s2").collect())
-    inter = len(a & b) / 20_000
-    assert abs(inter - 0.04) < 0.015  # ~= rate^2 when uncorrelated
-
-
-def test_hash_sample_fast_rate_and_nesting(spark, ids_df):
-    small = set(r["k"] for r in hash_sample_fast(ids_df, "k", 0.1).collect())
-    big = set(r["k"] for r in hash_sample_fast(ids_df, "k", 0.5).collect())
-    assert small <= big  # nested keep-sets at the same seed
-    assert abs(len(small) / 20_000 - 0.1) < 0.02
-    assert abs(len(big) / 20_000 - 0.5) < 0.02
-
-
-def test_stratified_sample_rates(spark):
-    df = spark.range(0, 30_000).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") % 3 == 0, "en").when(F.col("id") % 3 == 1, "de")
-        .otherwise("zz").alias("lang"),
-    )
-    got = (
-        stratified_sample(df, "k", "lang", {"en": 0.5, "de": 0.1})
-        .groupBy("lang").count().collect()
-    )
-    by = {r["lang"]: r["count"] for r in got}
-    assert abs(by["en"] / 10_000 - 0.5) < 0.03
-    assert abs(by["de"] / 10_000 - 0.1) < 0.02
-    assert "zz" not in by  # default_rate=0 drops unlisted strata
 
 
 # ------------------------------------------------------------------- lint

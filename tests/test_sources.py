@@ -1,9 +1,9 @@
-"""Recursive directory sources (S2): transcript trees + binary media."""
+"""Recursive directory sources (S2): transcript trees."""
 
 from __future__ import annotations
 
 from dedupe_spark import fixtures
-from dedupe_spark.sources.files import read_media_dir, read_transcript_dir
+from dedupe_spark.sources.files import read_transcript_dir
 
 
 def test_recursive_transcript_dir(spark, tmp_path):
@@ -25,19 +25,3 @@ def test_recursive_transcript_dir(spark, tmp_path):
         == tr.select("conv_id").distinct().count()
     )
 
-
-def test_recursive_media_dir(spark, tmp_path):
-    d = tmp_path / "media" / "sub"
-    d.mkdir(parents=True)
-    (d / "a.png").write_bytes(b"\x89PNG\r\n\x1a\n" + b"x" * 32)
-    (d / "b.jpg").write_bytes(b"\xff\xd8\xff" + b"y" * 32)
-    (tmp_path / "media" / "c.bin").write_bytes(b"plain payload")
-
-    got = read_media_dir(spark, str(tmp_path / "media"))
-    types = {r["src_path"].split("/")[-1]: r["media_type"] for r in got.collect()}
-    assert types == {
-        "a.png": "image/png",
-        "b.jpg": "image/jpeg",
-        "c.bin": "application/octet-stream",
-    }
-    assert got.where("media_id IS NULL").count() == 0
