@@ -7,10 +7,16 @@ and walks the collision list (/root/reference/src/deduplication.cpp:
 
 - bucket        = LSH band key (or exact fingerprint)
 - collision list = the group of rows sharing the key
-- bloom short-circuit = `bloom_preprune` (drop rows whose key provably
-  appears once — they cannot form a pair) + Spark's runtime
-  bloom-filter join (session config)
+- bloom short-circuit = the singleton prune in `repeated_blocks` (drop
+  rows whose key appears once — they cannot form a pair) + Spark's
+  runtime bloom-filter join (session config)
 - candidate walk = self-join on the key with a<b ordering
+
+One frequency pass serves every filter: `repeated_blocks` gives each
+row its key's document frequency (df) with one window over the key, and
+the singleton prune (df >= 2), the stop band (df <= max_block) and the
+salt split (df > salt_threshold) all read that column — C2Net's
+collision counting, one count per key.
 
 Scale design (the part the reference never faced — its buckets were
 bounded by chunk-size math):
@@ -28,7 +34,7 @@ bounded by chunk-size math):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_MAX_BLOCK = 64  # cap on rows sharing one band key
@@ -69,6 +75,11 @@ def bloom_preprune(
 ) -> DataFrame:
     """Drop rows whose band key appears exactly once — they cannot pair.
 
+    ``pipeline.run`` does not call this: :func:`repeated_blocks` prunes
+    singletons exactly, off the df pass :func:`candidate_pairs` needs
+    anyway, and ``candidate_pairs(bloom_preprune(b)) ==
+    candidate_pairs(b)``.
+
     All modes are the reference's HashDB bloom negative-lookup
     (/root/reference/src/HashDB.cpp:372, 429-431):
 
@@ -104,8 +115,8 @@ def bloom_preprune(
         .where(F.col("df") >= 2)
         .select("band_key")
     )
-    # the pruned table is read ~5x downstream (candidate_pairs: the
-    # frequency agg + both sides of the cold and hot join tiers); when
+    # the pruned table is read once per branch downstream (the cold and
+    # hot join tiers of candidate_pairs each re-read its df window); when
     # the caller hands us a deps list, cache it so the probe UDF (or the
     # semi join) runs ONCE instead of per branch — measured 1.6-2x on the
     # fast-path queries, and at scale it removes 4 redundant Arrow
@@ -196,28 +207,45 @@ def _tiered_pairs(
     )
 
 
+def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
+    """(id, band_key, df): the block rows whose band key repeats, each
+    with its key's document frequency — the exact singleton prune.
+
+    One ``count(*) over (partition by band_key)`` — a single shuffle on
+    the key, with no separate frequency aggregate to join back. The
+    window's exchange also partitions the rows for the self-join that
+    reads them. ``deps``: optional list that receives the result,
+    persisted, so the tiers of :func:`candidate_pairs` and the caller's
+    metrics read one computed copy."""
+    counted = blocks.select(
+        "id", "band_key", F.count("*").over(Window.partitionBy("band_key")).alias("df")
+    ).where(F.col("df") >= 2)
+    if deps is not None:
+        counted = counted.persist()
+        deps.append(counted)
+    return counted
+
+
 def candidate_pairs(
     blocks: DataFrame,
     max_block: int = DEFAULT_MAX_BLOCK,
     salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     salt_groups: int = DEFAULT_SALT_GROUPS,
+    deps: list | None = None,
 ) -> DataFrame:
     """Distinct candidate (id_a < id_b) pairs from band-key co-occurrence.
 
-    Three frequency tiers per key:
+    ``blocks`` is (id, band_key) rows, or the output of
+    :func:`repeated_blocks` when the caller also needs the df column;
+    otherwise it is computed here (persisted into ``deps`` when given).
+    Three frequency tiers per key, all read off that one df column:
       df > max_block        -> dropped (stop band; counted by caller)
       salt_threshold < df   -> salted self-join (hot keys spread over G tasks)
       otherwise             -> plain self-join
     """
-    # NOTE: freq is O(distinct band keys) — at 10^12-turn scale that is
-    # far beyond broadcast range, so this stays a shuffle join (both
-    # sides hash-partitioned by band_key; the same exchange is then
-    # reused by the self-join below).
-    freq = block_frequencies(blocks)
-    live = blocks.join(
-        freq.where(F.col("df") <= max_block).withColumnRenamed("df", "hot"),
-        "band_key",
-    )
+    if "df" not in blocks.columns:
+        blocks = repeated_blocks(blocks, deps)
+    live = blocks.where(F.col("df") <= max_block).withColumnRenamed("df", "hot")
     return _tiered_pairs(live, live, salt_threshold, salt_groups, require_lt=True)
 
 

@@ -13,7 +13,13 @@ O(log n) rounds and keep every step a plain DataFrame groupBy/join:
   small-star: each node points its *smaller-or-equal* neighbors at the
               minimum of its neighborhood
 
-Each iteration is checkpointed — ``localCheckpoint`` to truncate lineage
+Small graphs skip the loop: once the edge count the loop's checksum
+already brings to the driver is at most ``LOCAL_FINISH_MAX_EDGES``, the
+edges are collected (Arrow) and finished with union-find in Python —
+Kiveris et al.'s own advice for the tail of the computation. It
+replaces every star round, a few Spark jobs each, with one collect.
+
+Each star iteration is checkpointed — ``localCheckpoint`` to truncate lineage
 (else the DAG doubles every round), and optionally parquet snapshots per
 iteration (``checkpoint_dir``) with a metrics row per iteration AND a
 **per-partition lineage table** (iteration, partition_id, n_rows,
@@ -30,10 +36,19 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MAX_ITERATIONS = 50
+#: Edge count at or below which connected components finishes on the
+#: driver with union-find instead of the star loop. On a 4-core local
+#: session, collect + union-find of random string edges took 1.1-1.2 s
+#: at 10^5 edges and ~10 s at 10^6, against 2.6-3.2 s and ~13.5 s for
+#: ONE star round (the loop needs several): the bound caps driver
+#: memory, not time.
+LOCAL_FINISH_MAX_EDGES = 100_000
 
 
 class ConvergenceError(RuntimeError):
@@ -104,8 +119,12 @@ def connected_components(
     fixture oracle's representative choice (FIXTURES.md §3). Nodes not
     present in any edge are absent (caller unions singletons).
 
-    With ``checkpoint_dir``, every iteration writes its edge set and a
-    metrics row; ``resume=True`` restarts from the newest snapshot.
+    A graph with at most ``LOCAL_FINISH_MAX_EDGES`` edges — at the start
+    or after any star round — is finished on the driver by
+    :func:`_local_finish`, with the same output. With
+    ``checkpoint_dir``, every star iteration writes its edge set and a
+    metrics row (the local finish writes none); ``resume=True``
+    restarts from the newest snapshot.
     """
     spark = edges.sparkSession
     e = _canonical(edges)
@@ -125,6 +144,8 @@ def connected_components(
     # (driver latency is the serial fraction that caps scaling efficiency)
     e = e.localCheckpoint(eager=False)
     prev = _checksum(e)
+    if prev[0] <= LOCAL_FINISH_MAX_EDGES:
+        return _local_finish(e)
     converged = prev[0] == 0
     # a resume that lands exactly on max_iterations still gets one
     # verification round — convergence is only observable as a no-change
@@ -143,6 +164,8 @@ def connected_components(
             _write_snapshot(e, checkpoint_dir, it + 1, cur)
         if cur == prev or cur[0] == 0:
             converged = True
+        elif cur[0] <= LOCAL_FINISH_MAX_EDGES:
+            return _local_finish(e)
         prev = cur
     if not converged:
         raise ConvergenceError(
@@ -155,6 +178,42 @@ def connected_components(
     assign = e.select(F.col("src").alias("node"), F.col("dst").alias("cluster_id"))
     roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("cluster_id")).distinct()
     return assign.union(roots).groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
+
+
+def _local_finish(edges: DataFrame) -> DataFrame:
+    """(node, cluster_id) of ``edges`` by union-find on the driver.
+
+    Linking the larger root under the smaller keeps every root its
+    component's minimum node, the star loop's representative. Python's
+    ``<`` orders ints and strings as Spark does (UTF-8 byte order is
+    code-point order), so both paths pick the same minimum."""
+    table = edges.select("src", "dst").toArrow()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(table.column("src").to_pylist(), table.column("dst").to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    id_type = table.schema.field("src").type
+    out = pa.table({
+        "node": pa.array(nodes, type=id_type),
+        "cluster_id": pa.array([find(x) for x in nodes], type=id_type),
+    })
+    id_spark = edges.schema["src"].dataType
+    return edges.sparkSession.createDataFrame(
+        out, StructType([StructField("node", id_spark), StructField("cluster_id", id_spark)])
+    )
 
 
 def _write_snapshot(e: DataFrame, checkpoint_dir: str, iteration: int, checksum: tuple[int, int]) -> None:

@@ -8,7 +8,7 @@ batch job:
     -> register_turns (unique-turn registry + membership)     [D1]
     -> conversation docs (stable turn order)                  [S6 analog]
     -> blocking keys: exact md5 + MinHash/LSH bands           [C1, C2]
-    -> bloom pre-prune + salted skew-aware self-join          [I1, D1]
+    -> one band-key df pass + salted skew-aware self-join     [I1, D1]
     -> vectorized pair scoring (Jaccard gate -> Jaro-Winkler) [D2]
     -> thresholded edges + exact-fp edges
     -> large-star/small-star connected components             [clusters]
@@ -42,9 +42,13 @@ class PipelineConfig:
     # "fellegi_sunter" (EM-learned accept rule over the band's comparison
     # vectors, operators/linkage.py — no hand-tuned accept threshold)
     decider: str = "levenshtein"
+    # bloom_mode applies to link (cross_bloom_preprune) only, and
+    # bloom_shards / bloom_max_driver_bytes to link and run_incremental's
+    # registry probe; run() prunes singleton band keys exactly, off its
+    # one frequency pass.
     # "bloom" = explicit map-side Bloom pre-prune (functions/bloom.py);
     # "semi" = semi-join + Catalyst runtime bloom filter;
-    # "auto" (default) = bloom while the repeated-key bitmap fits
+    # "auto" (default) = bloom while the key bitmap fits
     # bloom_max_driver_bytes, semi beyond it — the 10^12-key registry
     # can never pin a multi-TB bitmap on the driver
     bloom_mode: str = "auto"
@@ -186,16 +190,10 @@ def run(
     # 3. exact-duplicate edges: linear-size first-writer-wins links
     exact_edges = blocking.exact_key_pairs(docs, "conv_id", "exact_fp")
 
-    # 4. LSH candidate pairs: explode bands -> bloom prune -> salted join
-    blocks = blocking.explode_blocks(docs, "conv_id", "bands")
-    bloom_stats: dict = {}
-    blocks = blocking.bloom_preprune(
-        blocks,
-        mode=cfg.bloom_mode,
-        stats=bloom_stats,
-        shards=cfg.bloom_shards,
-        max_driver_bytes=cfg.bloom_max_driver_bytes,
-        deps=persisted,  # the Bloom's cached broadcast is released with the caches
+    # 4. LSH candidate pairs: explode bands -> one df pass (singleton
+    # prune, stop band, salt split) -> salted join
+    blocks = blocking.repeated_blocks(
+        blocking.explode_blocks(docs, "conv_id", "bands"), deps=persisted
     )
     cands = blocking.candidate_pairs(
         blocks,
@@ -256,7 +254,7 @@ def run(
     clusters = clustering.clusters_with_singletons(docs.select("conv_id"), cc)
 
     if cfg.compute_metrics or catalog is not None:
-        metrics = _metrics(docs, blocks, cands, scored, clusters, bloom_stats, cfg)
+        metrics = _metrics(docs, blocks, cands, scored, clusters, cfg)
     else:
         metrics = spark.createDataFrame([], "metric string, value double")
 
@@ -433,8 +431,11 @@ def link(
         salt_groups=cfg.salt_groups,
     )
     # exact links need no scoring; sides are distinct namespaces so the
-    # orientation is already canonical (id_a from A, id_b from B)
-    cands = cands.join(exact, ["id_a", "id_b"], "left_anti")
+    # orientation is already canonical (id_a from A, id_b from B).
+    # persisted: the scoring plan and the n_candidate_pairs metric both
+    # read it — the salted cross join and its distinct run once
+    cands = cands.join(exact, ["id_a", "id_b"], "left_anti").persist()
+    persisted.append(cands)
 
     # 4. verification scoring over the union doc table (tagged ids make
     # the two sources collision-free in one keyed table)
@@ -717,32 +718,22 @@ def link_incremental(
     return result
 
 
-def _metrics(docs, blocks, cands, scored, clusters, bloom_stats=None, cfg=None) -> DataFrame:
+def _metrics(docs, blocks, cands, scored, clusters, cfg) -> DataFrame:
     spark = docs.sparkSession
-    max_block = cfg.max_block if cfg else blocking.DEFAULT_MAX_BLOCK
-    # stop-band suppression is never silent: count the keys/rows the
-    # df > max_block cap removed from candidate generation (one extra agg)
-    dropped = (
-        blocking.block_frequencies(blocks)
-        .where(F.col("df") > max_block)
-        .agg(
-            F.count("*").alias("keys"),
-            F.coalesce(F.sum("df"), F.lit(0)).alias("rows"),
-        )
-        .first()
-    )
-    bloom_mode = (bloom_stats or {}).get("bloom_mode_used", "")
+    # stop-band suppression is never silent: the keys/rows the
+    # df > max_block cap removed from candidate generation, read off the
+    # df column blocking already computed (blocks = repeated_blocks)
+    stop = F.col("df") > cfg.max_block
+    b = blocks.agg(
+        F.count("*").alias("rows"),
+        F.count_distinct(F.when(stop, F.col("band_key"))).alias("stop_keys"),
+        F.count(F.when(stop, 1)).alias("stop_rows"),
+    ).first()
     rows = [
         ("n_conversations", float(docs.count())),
-        ("n_block_rows_after_prune", float(blocks.count())),
-        ("n_stopband_keys_dropped", float(dropped["keys"])),
-        ("n_stopband_rows_dropped", float(dropped["rows"])),
-        ("bloom_mode_is_bloom", 1.0 if bloom_mode.startswith("bloom") else 0.0),
-        *[
-            (k, float(v))
-            for k, v in (bloom_stats or {}).items()
-            if isinstance(v, (int, float))
-        ],
+        ("n_block_rows_after_prune", float(b["rows"])),
+        ("n_stopband_keys_dropped", float(b["stop_keys"])),
+        ("n_stopband_rows_dropped", float(b["stop_rows"])),
         ("n_candidate_pairs", float(cands.count())),
         ("n_scored_pairs", float(scored.count())),
         ("n_duplicate_pairs", float(scored.where("is_dup").count())),

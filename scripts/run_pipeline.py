@@ -37,10 +37,12 @@ def main() -> None:
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
     ap.add_argument("--bloom-mode", default="auto", choices=["auto", "bloom", "semi"],
-                    help="explicit map-side bloom pre-prune vs semi-join + runtime "
-                         "filter; auto picks bloom while the bitmap fits the driver budget")
+                    help="--link-registry probe: explicit map-side bloom pre-prune vs "
+                         "semi-join + runtime filter; auto picks bloom while the bitmap "
+                         "fits the driver budget")
     ap.add_argument("--bloom-shards", type=int, default=1,
-                    help="shard the bloom build (bounded per-shard aggregates)")
+                    help="shard the bloom build of --link-registry and --incremental "
+                         "(bounded per-shard aggregates)")
     ap.add_argument("--decider", default="levenshtein",
                     choices=["levenshtein", "jaro_winkler", "fellegi_sunter"],
                     help="ambiguous-band second-stage scorer")

@@ -1,11 +1,22 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from dedupe_spark.operators import clustering
 from dedupe_spark.operators.clustering import (
     clusters_with_singletons,
     connected_components,
 )
+
+
+@pytest.fixture
+def star_loop(monkeypatch):
+    """Force the large-star/small-star loop: with the local-finish bound
+    at 0 only an empty graph skips it. The tests' graphs are far below
+    ``LOCAL_FINISH_MAX_EDGES``, so without this they finish on the
+    driver."""
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)
 
 
 def _edges(spark, pairs):
@@ -47,6 +58,7 @@ def test_singletons_fill(spark):
     assert got == {"a": "a", "b": "a", "q": "q"}
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_checkpoint_resume(spark, tmp_path):
     # run once with checkpoints, then resume from the snapshot — identical result
     pairs = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(12)] + [("m0", "m1"), ("m1", "m2")]
@@ -61,6 +73,7 @@ def test_checkpoint_resume(spark, tmp_path):
     assert os.path.isdir(os.path.join(d1, "metrics"))
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_per_partition_lineage_verifies(spark, tmp_path):
     from dedupe_spark.operators.clustering import verify_snapshot_lineage
 
@@ -87,6 +100,7 @@ def test_per_partition_lineage_verifies(spark, tmp_path):
         assert verify_snapshot_lineage(spark, d1, it)
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_resume_skips_torn_snapshot(spark, tmp_path):
     """A snapshot whose partitions don't match its lineage (torn write)
     must not be the resume point — resume falls back to the newest
@@ -115,6 +129,7 @@ def test_resume_skips_torn_snapshot(spark, tmp_path):
     assert resumed == full
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_max_iterations_is_a_failure_mode_not_a_truncation(spark):
     """SURVEY §7: bound iterations AND fail loudly — a long path graph
     needs O(log n) alternating-star rounds, so max_iterations=1 must
@@ -149,6 +164,7 @@ def test_adversarial_edge_set_converges_with_monotone_edges(spark):
     assert all(got[n(i)] == n(50) for i in range(50, 55))
 
 
+@pytest.mark.usefixtures("star_loop")
 def test_resumed_run_equals_fresh_run(spark, tmp_path):
     """VERDICT r3 task 6 done-criterion: resuming from a mid-run
     snapshot yields the identical assignment as the uninterrupted run."""
@@ -305,3 +321,106 @@ def test_prune_weak_edges_orientation_and_duplicates_normalized(spark):
         witness_edges=edges.select("src", "dst"),  # full overlap
     )
     assert kept.count() == 3  # every input row survives (isolated pair)
+
+
+# Every case above without the star_loop fixture runs on the local
+# finish (its graphs are far below LOCAL_FINISH_MAX_EDGES); each is
+# rerun here on the star loop, so both paths of connected_components
+# pass the same assertions.
+_BOTH_PATHS = [
+    test_chain_component,
+    test_two_components_and_cycle,
+    test_direction_and_duplicates_irrelevant,
+    test_singletons_fill,
+    test_adversarial_edge_set_converges_with_monotone_edges,
+    test_incremental_equals_from_scratch,
+    test_incremental_merges_two_existing_clusters,
+    test_incremental_new_min_rewrites_root,
+    test_incremental_untouched_components_survive_verbatim,
+    test_incremental_empty_delta_is_identity,
+    test_edge_support_bridge_between_triangles,
+]
+
+
+@pytest.mark.parametrize("case", _BOTH_PATHS, ids=lambda f: f.__name__)
+@pytest.mark.usefixtures("star_loop")
+def test_case_on_star_loop(spark, case):
+    case(spark)
+
+
+def test_small_graph_skips_star_loop(spark, monkeypatch):
+    """A graph under the bound never enters a star round."""
+    def boom(_):
+        raise AssertionError("star round on a small graph")
+
+    monkeypatch.setattr(clustering, "_large_star", boom)
+    e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(9)])
+    got = _assign(connected_components(e))
+    assert set(got.values()) == {"n00"} and len(got) == 10
+
+
+def test_local_finish_keeps_id_type(spark):
+    e = spark.createDataFrame([(3, 1), (2, 3), (9, 8)], "src long, dst long")
+    cc = connected_components(e)
+    assert [f.dataType.simpleString() for f in cc.schema.fields] == ["bigint", "bigint"]
+    assert _assign(cc) == {1: 1, 2: 1, 3: 1, 8: 8, 9: 8}
+    assert connected_components(e.limit(0)).count() == 0
+
+
+def test_star_loop_finishes_locally_once_small(spark, monkeypatch):
+    """A graph above the bound at the start runs star rounds only until
+    its edge count falls to the bound, then finishes on the driver."""
+    rounds = []
+    star = clustering._large_star
+
+    def counted(e):
+        rounds.append(1)
+        return star(e)
+
+    monkeypatch.setattr(clustering, "_large_star", counted)
+    # two 10-cliques: 90 edges; one star round contracts them to 18
+    pairs = [(a + o, b + o) for o in (0, 20) for a in range(10) for b in range(a + 1, 10)]
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    want = {n: (0 if n < 20 else 20) for n in [*range(10), *range(20, 30)]}
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 30)
+    assert _assign(connected_components(e)) == want
+    assert len(rounds) == 1
+    rounds.clear()
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)
+    assert _assign(connected_components(e)) == want
+    assert len(rounds) == 2  # the star loop needs a no-change round to stop
+
+
+try:
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    _graphs = st.one_of(
+        st.lists(st.tuples(st.integers(0, 30), st.integers(0, 30)), max_size=40).map(
+            lambda es: ("long", es)
+        ),
+        st.lists(
+            st.tuples(st.text("abcé日", max_size=3), st.text("abcé日", max_size=3)),
+            max_size=40,
+        ).map(lambda es: ("string", es)),
+    )
+
+    @settings(
+        max_examples=12, deadline=None,
+        suppress_health_check=[HealthCheck.function_scoped_fixture],
+    )
+    @given(_graphs, st.booleans())
+    def test_local_finish_equals_star_loop(spark, monkeypatch, graph, mirror):
+        """Random graphs with self-loops, duplicate and reversed edges:
+        the local finish and the star loop give the same assignment."""
+        id_type, pairs = graph
+        if mirror:  # every edge also reversed
+            pairs = pairs + [(b, a) for a, b in pairs]
+        e = spark.createDataFrame(pairs, f"src {id_type}, dst {id_type}")
+        local = _assign(connected_components(e))
+        with monkeypatch.context() as m:
+            m.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 0)
+            star = _assign(connected_components(e))
+        assert local == star
+except ImportError:  # pragma: no cover
+    pass

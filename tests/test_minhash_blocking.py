@@ -77,6 +77,42 @@ def test_stop_band_suppression(spark):
     assert {(r["id_a"], r["id_b"]) for r in got} == {("a", "b")}
 
 
+def test_one_pass_tiers_at_their_boundaries(spark):
+    """One df column drives all three filters: keys at df 1, at and
+    just past salt_threshold, at and just past max_block. Ids repeat
+    across keys, so the tiers must also dedupe a pair two keys share."""
+    salt_threshold, max_block = 4, 8
+    sizes = {"k1": 1, "ks": salt_threshold, "ks1": salt_threshold + 1,
+             "km": max_block, "km1": max_block + 1}
+    rows = [(f"id{(i * 5 + j) % 13:02d}", k) for j, (k, n) in enumerate(sizes.items())
+            for i in range(n)]
+    df = spark.createDataFrame(rows, "id string, band_key string")
+    assert {k: sum(1 for _, kk in rows if kk == k) for k in sizes} == sizes
+    expect = {
+        (a, b)
+        for a, ka in rows
+        for b, kb in rows
+        if ka == kb and a < b and sizes[ka] <= max_block
+    }
+    deps: list = []
+    got = blocking.candidate_pairs(
+        df, max_block=max_block, salt_threshold=salt_threshold, salt_groups=3, deps=deps
+    )
+    assert {(r["id_a"], r["id_b"]) for r in got.collect()} == expect
+    assert len(deps) == 1  # the one windowed frame, persisted
+    counted = {(r["band_key"], r["df"]) for r in deps[0].collect()}
+    assert counted == {(k, n) for k, n in sizes.items() if n >= 2}
+    for d in deps:
+        d.unpersist()
+    # the traced replay prunes with the Bloom first: same pairs
+    for mode in ("bloom", "semi"):
+        pruned = blocking.bloom_preprune(df, mode=mode)
+        again = blocking.candidate_pairs(
+            pruned, max_block=max_block, salt_threshold=salt_threshold, salt_groups=3
+        )
+        assert {(r["id_a"], r["id_b"]) for r in again.collect()} == expect
+
+
 def test_bloom_preprune_keeps_only_pairable(spark):
     rows = [("a", "k1"), ("b", "k1"), ("c", "k2"), ("d", "k3"), ("e", "k3"), ("f", "k3")]
     df = spark.createDataFrame(rows, "id string, band_key string")

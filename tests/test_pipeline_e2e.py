@@ -122,3 +122,25 @@ def test_pairwise_f1_with_cluster_repair(spark, result):
     res.release()
     assert f1 >= 0.99, f"F1={f1:.4f} precision={prec:.4f} recall={rec:.4f}"
     assert n_edges <= n_edges_base
+
+
+#: Spark jobs one uncommitted ``pipeline.run`` of ``fixtures.transcripts(120)``
+#: takes in the test session, measured after blocking moved to one df
+#: pass and connected components to the union-find finish. A run of
+#: this size pays for its job count, not its rows.
+RUN_JOBS = 29
+
+
+def test_run_job_count_guard(spark, transcripts_small):
+    transcripts_small.count()  # the shared input is cached outside the group
+    sc = spark.sparkContext
+    group = "test-run-job-count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = pipeline.run(transcripts_small)
+        res.clusters.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    res.release()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= RUN_JOBS + 5, f"pipeline.run took {jobs} Spark jobs"
