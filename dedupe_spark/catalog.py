@@ -28,6 +28,7 @@ import tempfile
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotCatalog:
@@ -74,16 +75,21 @@ class SnapshotCatalog:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
 
-        dirs = [data_dir]
+        # each data dir's schema, so a dir with no parquet file (an empty
+        # partitioned append writes none) stays readable; None = infer
+        # (metas written before schemas were recorded)
+        dirs, schemas = [data_dir], [df.schema.json()]
         if mode == "append" and sid > 1:
             prev = self._read_meta(table, sid - 1)
             dirs = prev["data_dirs"] + dirs
+            schemas = prev.get("schemas", [None] * len(prev["data_dirs"])) + schemas
 
         meta = {
             "snapshot_id": sid,
             "mode": mode,
             "partition_by": partition_by or [],
             "data_dirs": dirs,
+            "schemas": schemas,
             "committed_at_unix": int(time.time()),
             "summary": summary or {},
         }
@@ -147,7 +153,12 @@ class SnapshotCatalog:
         if sid == 0:
             raise FileNotFoundError(f"table {table} has no committed snapshot")
         meta = self._read_meta(table, sid)
-        dfs = [self.spark.read.parquet(d) for d in meta["data_dirs"]]
+        schemas = meta.get("schemas", [None] * len(meta["data_dirs"]))
+        dfs = [
+            (self.spark.read.schema(StructType.fromJson(json.loads(s))) if s else self.spark.read)
+            .parquet(d)
+            for d, s in zip(meta["data_dirs"], schemas)
+        ]
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

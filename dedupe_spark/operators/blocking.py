@@ -178,27 +178,30 @@ def _tiered_pairs(
     (band_key, salt(a)) — and a hot key's work spreads over
     ``salt_groups`` tasks. ``require_lt`` adds the self-join's
     id_a < id_b orientation; cross-table callers pass False (their
-    sides are distinct namespaces)."""
-    orient = (F.col("id_a") < F.col("id_b")) if require_lt else F.lit(True)
+    sides are distinct namespaces).
 
-    a1 = a.where(F.col("hot") <= salt_threshold).select(
-        "band_key", F.col("id").alias("id_a")
-    )
-    b1 = b.where(F.col("hot") <= salt_threshold).select(
-        "band_key", F.col("id").alias("id_b")
-    )
-    pairs_cold = a1.join(b1, "band_key").where(orient)
+    Rows with a boolean ``old`` column set (committed state a fold
+    probes, see :func:`candidate_pairs`) pair only with unset rows."""
+    orient = (F.col("id_a") < F.col("id_b")) if require_lt else F.lit(True)
+    flagged = "old" in a.columns
+
+    def side(df: DataFrame, s: str, *extra) -> DataFrame:
+        old = [F.col("old").alias(f"old_{s}")] if flagged else []
+        return df.select("band_key", F.col("id").alias(f"id_{s}"), *old, *extra)
+
+    if flagged:
+        orient = orient & ~(F.col("old_a") & F.col("old_b"))
+
+    cold = F.col("hot") <= salt_threshold
+    pairs_cold = side(a.where(cold), "a").join(side(b.where(cold), "b"), "band_key").where(orient)
 
     salt = F.pmod(F.xxhash64("id"), F.lit(salt_groups)).cast("int")
-    a2 = a.where(F.col("hot") > salt_threshold).select(
-        "band_key", F.col("id").alias("id_a"), salt.alias("salt")
-    )
-    b2 = b.where(F.col("hot") > salt_threshold).select(
-        "band_key",
-        F.col("id").alias("id_b"),
+    a2 = side(a.where(~cold), "a", salt.alias("salt"))
+    b2 = side(
+        b.where(~cold), "b",
         F.explode(F.sequence(F.lit(0), F.lit(salt_groups - 1))).alias("salt"),
     )
-    pairs_hot = a2.join(b2, ["band_key", "salt"]).where(orient).drop("salt")
+    pairs_hot = a2.join(b2, ["band_key", "salt"]).where(orient)
 
     return (
         pairs_cold.select("id_a", "id_b")
@@ -208,8 +211,9 @@ def _tiered_pairs(
 
 
 def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
-    """(id, band_key, df): the block rows whose band key repeats, each
-    with its key's document frequency — the exact singleton prune.
+    """(id, band_key, ..., df): the block rows whose band key repeats,
+    each with its key's document frequency — the exact singleton prune.
+    Other columns (a fold's ``old`` flag) pass through.
 
     One ``count(*) over (partition by band_key)`` — a single shuffle on
     the key, with no separate frequency aggregate to join back. The
@@ -218,7 +222,7 @@ def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
     persisted, so the tiers of :func:`candidate_pairs` and the caller's
     metrics read one computed copy."""
     counted = blocks.select(
-        "id", "band_key", F.count("*").over(Window.partitionBy("band_key")).alias("df")
+        "*", F.count("*").over(Window.partitionBy("band_key")).alias("df")
     ).where(F.col("df") >= 2)
     if deps is not None:
         counted = counted.persist()
@@ -242,6 +246,11 @@ def candidate_pairs(
       df > max_block        -> dropped (stop band; counted by caller)
       salt_threshold < df   -> salted self-join (hot keys spread over G tasks)
       otherwise             -> plain self-join
+
+    A fold (``pipeline.run_incremental``) hands the batch's rows plus the
+    committed rows of the keys it touches, the latter with a boolean
+    ``old`` column set: df then counts committed + batch rows, so the
+    stop band is the full corpus's, and no old×old pair is emitted.
     """
     if "df" not in blocks.columns:
         blocks = repeated_blocks(blocks, deps)

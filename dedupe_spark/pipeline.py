@@ -5,6 +5,7 @@ The reference's flagship flow (``insert_files``,
 batch job:
 
   transcripts
+    -> _prepare: PII scrub (the one hygiene step)            [C4]
     -> register_turns (unique-turn registry + membership)     [D1]
     -> conversation docs (stable turn order)                  [S6 analog]
     -> blocking keys: exact md5 + MinHash/LSH bands           [C1, C2]
@@ -13,6 +14,13 @@ batch job:
     -> thresholded edges + exact-fp edges
     -> large-star/small-star connected components             [clusters]
     -> clusters / metrics committed as catalog snapshots      [S4]
+
+Like the reference's single insert flow (an incremental insert runs the
+same ``register_block`` probe as a first insert), ``run`` and
+``run_incremental`` share one core, ``_resolve_delta``: a batch run is
+a delta against no committed state. ``link`` and ``link_incremental``
+share its stages (``_prepare``, ``_drop_exact``, ``_score``) but keep
+``cross_candidate_pairs``, whose stop band is per side.
 """
 
 from __future__ import annotations
@@ -24,6 +32,7 @@ from pyspark.sql import functions as F
 
 from dedupe_spark.catalog import SnapshotCatalog
 from dedupe_spark.operators import blocking, clustering, lifecycle, minhash, normalize, scoring
+from dedupe_spark.operators.transcript_qa import transcript_lint
 
 
 @dataclass
@@ -74,7 +83,8 @@ class PipelineConfig:
     # in the full duplicate graph are dropped unless their jaccard is
     # high-confidence — transitive clustering otherwise merges two real
     # entities through one spurious score. Exact-fp edges are certain:
-    # they count as witnesses and are never pruned
+    # they count as witnesses and are never pruned. run() only:
+    # run_incremental refuses it (support needs the committed graph)
     cluster_repair: bool = False
     cluster_repair_min_support: int = 1
     cluster_repair_strong: float = 0.9
@@ -158,6 +168,133 @@ def _docs_with_bands(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+def _prepare(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The one hygiene step every entry point runs before any
+    fingerprint, key or commit: the optional PII scrub, so two turns
+    differing only in an e-mail/IP/phone collide on every key and no raw
+    identifier reaches a committed table (registry, link registry
+    docs). The only reader of ``cfg.scrub_pii``."""
+    if cfg.scrub_pii:
+        from dedupe_spark.operators.privacy import redact_expr
+
+        transcripts = transcripts.withColumn("text", redact_expr(F.col("text")))
+    return transcripts
+
+
+def _drop_exact(cands: DataFrame, exact: DataFrame) -> DataFrame:
+    """Candidates minus the exact pairs, which need no scoring. Compared
+    in CANONICAL orientation: candidates are (least, greatest), but a
+    fold's exact pair (committed group min, new id) is not when the new
+    id sorts first — a verbatim compare would re-score that duplicate."""
+    return cands.join(
+        exact.select(
+            F.least("id_a", "id_b").alias("ea"), F.greatest("id_a", "id_b").alias("eb")
+        ),
+        (F.col("id_a") == F.col("ea")) & (F.col("id_b") == F.col("eb")),
+        "left_anti",
+    )
+
+
+def _score(cands: DataFrame, docs: list, cfg: PipelineConfig, persisted: list) -> DataFrame:
+    """Verification scoring (cheap -> expensive) of ``cands`` over the
+    union of the ``docs`` frames; reuses their distinct-shingle column
+    when every frame carries one (``_docs_with_bands``), recomputes it
+    otherwise (docs rebuilt from the registry)."""
+    sh = "sh" if all("sh" in d.columns for d in docs) else None
+    cols = ["conv_id", "doc", "doc_len", *([sh] if sh else [])]
+    union = docs[0].select(*cols)
+    for d in docs[1:]:
+        union = union.unionByName(d.select(*cols))
+    return scoring.score_pairs(
+        cands, union,
+        min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
+        decider=cfg.decider, sh_col=sh, deps=persisted,
+    )
+
+
+def _resolve_delta(
+    docs: DataFrame,
+    cfg: PipelineConfig,
+    persisted: list,
+    committed: dict | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The self-dedup core of ``run`` and ``run_incremental``: a batch
+    of banded ``docs`` resolved against ``committed`` state (None for a
+    batch run — a delta against nothing). Returns (blocks, candidate
+    pairs, scored pairs, edges ``(src, dst)``).
+
+    With ``committed`` (the ``doc_index``, ``doc_blocks``,
+    ``membership`` and ``unique_turns`` frames of the committed run):
+      * each batch doc also links to its fp's committed group minimum
+        (bucket-restricted probe of ``doc_index``);
+      * the committed ``doc_blocks`` rows of the keys the batch touches
+        join the batch's block rows, flagged ``old``. The one df window
+        then counts committed + batch frequency, so the stop band is the
+        one a from-scratch run over the full corpus applies, and
+        ``candidate_pairs`` emits new×new and new×old pairs, never
+        old×old (the committed clusters already encode those);
+      * scoring reads only the committed docs a candidate touches,
+        reconstructed from the registry — O(candidates), not O(corpus).
+    """
+    exact = blocking.exact_key_pairs(docs, "conv_id", "exact_fp")
+    blocks = blocking.explode_blocks(docs, "conv_id", "bands")
+    if committed is not None:
+        new_idx = _with_key_bucket(docs.select("conv_id", "exact_fp"), "exact_fp")
+        old_min = (
+            committed["doc_index"]
+            .join(new_idx.select("key_bucket", "exact_fp").distinct(), ["key_bucket", "exact_fp"])
+            .groupBy("key_bucket", "exact_fp")
+            .agg(F.min("conv_id").alias("id_a"))
+        )
+        exact_old = (
+            new_idx.join(old_min, ["key_bucket", "exact_fp"])
+            .where(F.col("id_a") != F.col("conv_id"))
+            .select("id_a", F.col("conv_id").alias("id_b"))
+        )
+        exact = exact_old.union(exact).distinct()
+        keys = _with_key_bucket(blocks, "band_key").select("key_bucket", "band_key").distinct()
+        old_blocks = committed["doc_blocks"].join(keys, ["key_bucket", "band_key"])
+        blocks = blocks.withColumn("old", F.lit(False)).unionByName(
+            old_blocks.select("id", "band_key", F.lit(True).alias("old"))
+        )
+    # one df pass: singleton prune, stop band, salt split
+    blocks = blocking.repeated_blocks(blocks, deps=persisted)
+    cands = _drop_exact(
+        blocking.candidate_pairs(
+            blocks,
+            max_block=cfg.max_block,
+            salt_threshold=cfg.salt_threshold,
+            salt_groups=cfg.salt_groups,
+        ),
+        exact,
+    )
+    score_docs = [docs]
+    if committed is not None:
+        ids = cands.select(F.explode(F.array("id_a", "id_b")).alias("conv_id")).distinct()
+        old_ids = ids.join(docs.select("conv_id"), "conv_id", "left_anti")
+        score_docs.append(normalize.conversation_docs(
+            lifecycle.reconstruct(
+                committed["membership"].join(old_ids, "conv_id", "left_semi"),
+                committed["unique_turns"],
+            )
+        ))
+    scored = _score(cands, score_docs, cfg, persisted)
+
+    exact_edges = exact.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    sim_edges = scored.where("is_dup").select(
+        F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard"
+    )
+    if cfg.cluster_repair:
+        sim_edges = clustering.prune_weak_edges(
+            sim_edges,
+            min_support=cfg.cluster_repair_min_support,
+            strong_score=cfg.cluster_repair_strong,
+            score_col="jaccard",
+            witness_edges=exact_edges,
+        )
+    return blocks, cands, scored, exact_edges.union(sim_edges.select("src", "dst"))
+
+
 def run(
     transcripts: DataFrame,
     config: PipelineConfig | None = None,
@@ -167,16 +304,8 @@ def run(
     spark = transcripts.sparkSession
     persisted: list[DataFrame] = []
 
-    # 0. optional per-turn hygiene, BEFORE any fingerprint/key derivation
-    lint_df = None
-    if cfg.lint:
-        from dedupe_spark.operators.transcript_qa import transcript_lint
-
-        lint_df = transcript_lint(transcripts)
-    if cfg.scrub_pii:
-        from dedupe_spark.operators.privacy import redact_expr
-
-        transcripts = transcripts.withColumn("text", redact_expr(F.col("text")))
+    transcripts = _prepare(transcripts, cfg)
+    lint_df = transcript_lint(transcripts) if cfg.lint else None
 
     # 1. turn-level registry (exact dedup of turns, the reference's core)
     unique_turns, membership = lifecycle.register_turns(transcripts, deps=persisted)
@@ -187,55 +316,10 @@ def run(
     docs = docs.persist()
     persisted.append(docs)
 
-    # 3. exact-duplicate edges: linear-size first-writer-wins links
-    exact_edges = blocking.exact_key_pairs(docs, "conv_id", "exact_fp")
-
-    # 4. LSH candidate pairs: explode bands -> one df pass (singleton
-    # prune, stop band, salt split) -> salted join
-    blocks = blocking.repeated_blocks(
-        blocking.explode_blocks(docs, "conv_id", "bands"), deps=persisted
-    )
-    cands = blocking.candidate_pairs(
-        blocks,
-        max_block=cfg.max_block,
-        salt_threshold=cfg.salt_threshold,
-        salt_groups=cfg.salt_groups,
-    )
-    # exact pairs need no scoring — drop them from the candidate set
-    cands = cands.join(
-        exact_edges.withColumnRenamed("id_a", "ea").withColumnRenamed("id_b", "eb"),
-        (F.col("id_a") == F.col("ea")) & (F.col("id_b") == F.col("eb")),
-        "left_anti",
-    )
-
-    # 5. verification scoring (cheap -> expensive)
-    scored = scoring.score_pairs(
-        cands,
-        docs.select("conv_id", "doc", "doc_len", "sh"),
-        min_len_ratio=cfg.min_len_ratio,
-        decider=cfg.decider,
-        sh_col="sh",
-        deps=persisted,
-    )
-    sim_edges = scored.where("is_dup").select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst"), "jaccard"
-    )
-    if cfg.cluster_repair:
-        sim_edges = clustering.prune_weak_edges(
-            sim_edges,
-            min_support=cfg.cluster_repair_min_support,
-            strong_score=cfg.cluster_repair_strong,
-            score_col="jaccard",
-            witness_edges=exact_edges.select(
-                F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-            ),
-        )
-    sim_edges = sim_edges.select("src", "dst")
+    # 3-5. exact pairs, candidates, scoring, edges
+    blocks, cands, scored, edges = _resolve_delta(docs, cfg, persisted)
 
     # 6. transitive clustering
-    edges = exact_edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(sim_edges)
     # durable-by-default iteration state: when this run has a catalog,
     # CC snapshots land under its warehouse — localCheckpoint state dies
     # with an executor at real scale, a warehouse parquet snapshot doesn't
@@ -351,6 +435,29 @@ def _assign_links(exact: DataFrame, scored: DataFrame, mode: str) -> DataFrame:
     )
 
 
+def _link_result(links, scored, cands, docs_a, docs_b, metrics, persisted) -> LinkResult:
+    """A LinkResult whose every frame speaks the caller's id namespace:
+    the internal side tags are stripped from ids on ALL outputs, not
+    just links (ids come back as strings — _tag_side stringifies
+    non-string conv_ids; callers cast back where the source ids were
+    numeric)."""
+
+    def strip(df: DataFrame, *cols: str) -> DataFrame:
+        for c in cols:
+            df = df.withColumn(c, _strip_side(c))
+        return df
+
+    return LinkResult(
+        links=links,
+        scored_pairs=strip(scored, "id_a", "id_b"),
+        candidate_pairs=strip(cands, "id_a", "id_b"),
+        docs_a=strip(docs_a, "conv_id"),
+        docs_b=strip(docs_b, "conv_id"),
+        metrics=metrics,
+        persisted=persisted,
+    )
+
+
 def link(
     transcripts_a: DataFrame,
     transcripts_b: DataFrame,
@@ -391,8 +498,8 @@ def link(
     spark = transcripts_a.sparkSession
     persisted: list[DataFrame] = []
 
-    docs_a = _docs_with_bands(_tag_side(transcripts_a, _SIDE_A), cfg).persist()
-    docs_b = _docs_with_bands(_tag_side(transcripts_b, _SIDE_B), cfg).persist()
+    docs_a = _docs_with_bands(_tag_side(_prepare(transcripts_a, cfg), _SIDE_A), cfg).persist()
+    docs_b = _docs_with_bands(_tag_side(_prepare(transcripts_b, cfg), _SIDE_B), cfg).persist()
     persisted += [docs_a, docs_b]
 
     # 2. exact cross links (linear in group size on both sides)
@@ -430,23 +537,14 @@ def link(
         salt_threshold=cfg.salt_threshold,
         salt_groups=cfg.salt_groups,
     )
-    # exact links need no scoring; sides are distinct namespaces so the
-    # orientation is already canonical (id_a from A, id_b from B).
     # persisted: the scoring plan and the n_candidate_pairs metric both
     # read it — the salted cross join and its distinct run once
-    cands = cands.join(exact, ["id_a", "id_b"], "left_anti").persist()
+    cands = _drop_exact(cands, exact).persist()
     persisted.append(cands)
 
     # 4. verification scoring over the union doc table (tagged ids make
     # the two sources collision-free in one keyed table)
-    scoring_docs = docs_a.select("conv_id", "doc", "doc_len", "sh").unionByName(
-        docs_b.select("conv_id", "doc", "doc_len", "sh")
-    )
-    scored = scoring.score_pairs(
-        cands, scoring_docs,
-        min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
-        decider=cfg.decider, sh_col="sh", deps=persisted,
-    )
+    scored = _score(cands, [docs_a, docs_b], cfg, persisted)
 
     # 5. assignment
     links = _assign_links(exact, scored, cfg.link_mode)
@@ -477,23 +575,7 @@ def link(
     else:
         metrics = spark.createDataFrame([], "metric string, value double")
 
-    # every exposed frame speaks the caller's id namespace: the internal
-    # side tags are stripped from ids on ALL outputs, not just links
-    # (note: ids come back as strings — _tag_side stringifies non-string
-    # conv_ids; callers cast back where the source ids were numeric)
-    result = LinkResult(
-        links=links,
-        scored_pairs=scored.withColumn("id_a", _strip_side("id_a")).withColumn(
-            "id_b", _strip_side("id_b")
-        ),
-        candidate_pairs=cands.withColumn("id_a", _strip_side("id_a")).withColumn(
-            "id_b", _strip_side("id_b")
-        ),
-        docs_a=docs_a.withColumn("conv_id", _strip_side("conv_id")),
-        docs_b=docs_b.withColumn("conv_id", _strip_side("conv_id")),
-        metrics=metrics,
-        persisted=persisted,
-    )
+    result = _link_result(links, scored, cands, docs_a, docs_b, metrics, persisted)
     if catalog is not None:
         catalog.write("links", links)
         catalog.write("link_metrics", metrics)
@@ -507,29 +589,24 @@ def link(
         # so per-batch scoring reuses them instead of re-deriving the
         # tokenize+shingle tree every batch). Ids are committed UNTAGGED
         # (the caller's namespace).
-        reg_docs = docs_b.select(
-            _strip_side("conv_id"), "doc", "doc_len", "sh"
-        )
+        reg = result.docs_b
         catalog.write(
             "link_registry_docs",
             lifecycle.with_fp_bucket(
-                reg_docs, key_col="conv_id", out_col="id_bucket"
+                reg.select("conv_id", "doc", "doc_len", "sh"),
+                key_col="conv_id", out_col="id_bucket",
             ),
             partition_by=["id_bucket"],
         )
         catalog.write(
             "link_registry_index",
-            _with_key_bucket(
-                docs_b.select(_strip_side("conv_id"), "exact_fp"), "exact_fp"
-            ),
+            _with_key_bucket(reg.select("conv_id", "exact_fp"), "exact_fp"),
             partition_by=["key_bucket"],
         )
         catalog.write(
             "link_registry_blocks",
             _with_key_bucket(
-                blocking.explode_blocks(docs_b, "conv_id", "bands").select(
-                    _strip_side("id").alias("conv_id"), "band_key"
-                ),
+                blocking.explode_blocks(reg, "conv_id", "bands").withColumnRenamed("id", "conv_id"),
                 "band_key",
             ),
             partition_by=["key_bucket"],
@@ -597,7 +674,7 @@ def link_incremental(
             "left_anti",
         )
 
-    ndocs = _docs_with_bands(_tag_side(new_probe, _SIDE_A), cfg).persist()
+    ndocs = _docs_with_bands(_tag_side(_prepare(new_probe, cfg), _SIDE_A), cfg).persist()
     persisted.append(ndocs)
 
     # 2. exact links against the committed fp index
@@ -649,7 +726,8 @@ def link_incremental(
         max_block=cfg.max_block,
         salt_threshold=cfg.salt_threshold,
         salt_groups=cfg.salt_groups,
-    ).join(exact, ["id_a", "id_b"], "left_anti").persist()
+    )
+    cands = _drop_exact(cands, exact).persist()
     persisted.append(cands)
 
     # 4. scoring over the batch docs + ONLY the touched registry docs
@@ -663,18 +741,12 @@ def link_incremental(
         out_col="id_bucket",
     ).persist()
     persisted.append(pair_b_idx)
-    reg_docs = (
+    reg_docs = _tag_side(
         lifecycle.bucket_pruned(catalog.read("link_registry_docs"), "id_bucket", pair_b_idx)
-        .join(pair_b_idx.select("conv_id"), "conv_id", "left_semi")
+        .join(pair_b_idx.select("conv_id"), "conv_id", "left_semi"),
+        _SIDE_B,
     )
-    scoring_docs = ndocs.select("conv_id", "doc", "doc_len", "sh").unionByName(
-        _tag_side(reg_docs, _SIDE_B).select("conv_id", "doc", "doc_len", "sh")
-    )
-    scored = scoring.score_pairs(
-        cands, scoring_docs,
-        min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
-        decider=cfg.decider, sh_col="sh", deps=persisted,
-    )
+    scored = _score(cands, [ndocs, reg_docs], cfg, persisted)
 
     # 5. batch-local assignment (valid globally: each probe record
     # appears in exactly one batch)
@@ -702,20 +774,7 @@ def link_incremental(
     # (conv_id, doc, doc_len, sh, id_bucket) — narrower and smaller than
     # link()'s full banded registry table; consumers needing the full
     # registry read link_registry_docs from the catalog
-    result = LinkResult(
-        links=links,
-        scored_pairs=scored.withColumn("id_a", _strip_side("id_a")).withColumn(
-            "id_b", _strip_side("id_b")
-        ),
-        candidate_pairs=cands.withColumn("id_a", _strip_side("id_a")).withColumn(
-            "id_b", _strip_side("id_b")
-        ),
-        docs_a=ndocs.withColumn("conv_id", _strip_side("conv_id")),
-        docs_b=reg_docs,  # committed ids are already the caller's namespace
-        metrics=metrics,
-        persisted=persisted,
-    )
-    return result
+    return _link_result(links, scored, cands, ndocs, reg_docs, metrics, persisted)
 
 
 def _metrics(docs, blocks, cands, scored, clusters, cfg) -> DataFrame:
@@ -744,38 +803,47 @@ def _metrics(docs, blocks, cands, scored, clusters, cfg) -> DataFrame:
 
 def commit(result: PipelineResult, catalog: SnapshotCatalog) -> None:
     """Atomic publish of all output tables (reference: splice + rename,
-    src/deduplication.cpp:612-640). The unique-turn registry is laid out
-    bucket-partitioned on fp — the SURVEY §1.2 mapping of HashDB's
-    bucketed disk KV (src/HashDB.cpp:339-450) — so registry probes
-    (incremental/streaming ingest) prune to the buckets they touch
-    instead of rescanning the whole table."""
-    catalog.write(
-        "unique_turns",
-        lifecycle.with_fp_bucket(result.unique_turns),
-        partition_by=["fp_bucket"],
-    )
-    catalog.write("membership", result.membership)
+    src/deduplication.cpp:612-640)."""
+    _commit_docs(catalog, result.docs, result.unique_turns, result.membership)
     catalog.write("clusters", result.clusters)
     catalog.write("edges", result.edges)
     catalog.write("metrics", result.metrics)
     if result.lint is not None:
         catalog.write("lint", result.lint)
-    # blocking-key index tables: what an incremental batch probes instead
-    # of re-blocking the corpus (run_incremental). Both bucket-partitioned
-    # like the registry so a probe prunes to the buckets it touches.
-    # doc_blocks is written UNPRUNED (singleton bands included): a band
-    # that pairs with nothing today may pair with tomorrow's batch.
+
+
+def _commit_docs(
+    catalog: SnapshotCatalog,
+    docs: DataFrame,
+    unique_turns: DataFrame,
+    membership: DataFrame,
+    mode: str = "overwrite",
+) -> None:
+    """The turn registry and the blocking-key index tables, in full
+    (``run``) or as the batch's append (``run_incremental``). The
+    unique-turn registry is laid out bucket-partitioned on fp — the
+    SURVEY §1.2 mapping of HashDB's bucketed disk KV
+    (src/HashDB.cpp:339-450) — so registry probes (incremental/streaming
+    ingest) prune to the buckets they touch instead of rescanning the
+    whole table. ``doc_index``/``doc_blocks`` are what a fold probes
+    instead of re-blocking the corpus, bucket-partitioned the same way.
+    doc_blocks is written UNPRUNED (singleton bands included): a band
+    that pairs with nothing today may pair with tomorrow's batch."""
+    catalog.write(
+        "unique_turns",
+        lifecycle.with_fp_bucket(unique_turns),
+        mode=mode, partition_by=["fp_bucket"],
+    )
+    catalog.write("membership", membership, mode=mode)
     catalog.write(
         "doc_index",
-        _with_key_bucket(result.docs.select("conv_id", "exact_fp"), "exact_fp"),
-        partition_by=["key_bucket"],
+        _with_key_bucket(docs.select("conv_id", "exact_fp"), "exact_fp"),
+        mode=mode, partition_by=["key_bucket"],
     )
     catalog.write(
         "doc_blocks",
-        _with_key_bucket(
-            blocking.explode_blocks(result.docs, "conv_id", "bands"), "band_key"
-        ),
-        partition_by=["key_bucket"],
+        _with_key_bucket(blocking.explode_blocks(docs, "conv_id", "bands"), "band_key"),
+        mode=mode, partition_by=["key_bucket"],
     )
 
 
@@ -833,25 +901,26 @@ def run_incremental(
     cluster level. Nothing re-blocks, re-scores, or re-clusters the
     existing corpus:
 
-      1. registry: ``register_turns_incremental`` (bloom-split probe,
+      1. the same ``_prepare`` hygiene step as ``run``;
+      2. registry: ``register_turns_incremental`` (bloom-split probe,
          dense-id continuation) — appends O(batch) delta snapshots;
-      2. blocking: the batch's band keys / exact fps probe the committed
-         ``doc_blocks`` / ``doc_index`` tables (bucket-pruned joins), so
-         candidates = new×old ∪ new×new — never old×old, whose verdicts
-         the committed clusters already encode;
-      3. the stop-band cap applies to the key's TOTAL frequency
-         (committed df + batch df), matching what a from-scratch run
-         over the full corpus would drop;
-      4. scoring reads only the touched old docs, reconstructed from the
-         registry (membership ⋈ unique_turns, semi-joined to the
-         candidate ids) — O(candidates), not O(corpus);
-      5. clustering: ``incremental_components`` unions the committed
+      3. blocking and scoring: ``run``'s own core, ``_resolve_delta``,
+         against the committed ``doc_index`` / ``doc_blocks`` /
+         registry tables — candidates = new×old ∪ new×new, never
+         old×old, and the stop band reads the key's TOTAL frequency
+         (committed + batch), what a from-scratch run would drop;
+      4. clustering: ``incremental_components`` unions the committed
          assignment's star edges with the delta edges — O(delta)
          contraction work;
-      6. commit: registry/index/edges tables take append-mode deltas;
-         cluster assignments append ONLY changed+new rows to the
-         ``cluster_updates`` log (``current_clusters`` is the
-         merge-on-read view, ``compact_clusters`` folds it).
+      5. commit: registry/index/edges (and ``lint``) tables take
+         append-mode deltas; cluster assignments append ONLY
+         changed+new rows to the ``cluster_updates`` log
+         (``current_clusters`` is the merge-on-read view,
+         ``compact_clusters`` folds it).
+
+    ``cluster_repair`` is refused: triangle support needs the committed
+    graph, and repairing the delta's edges alone would break the
+    contract below.
 
     Equivalence contract (tested): when no band key crosses the
     stop-band threshold across the split, ``current_clusters`` after
@@ -861,15 +930,22 @@ def run_incremental(
     monotonicity the reference's registry has.)
     """
     cfg = config or PipelineConfig()
+    if cfg.cluster_repair:
+        raise ValueError(
+            "run_incremental does not support cluster_repair: triangle support "
+            "needs the committed graph (re-run run() over the full input instead)"
+        )
     persisted: list[DataFrame] = []
-
-    unique_turns = catalog.read("unique_turns")
-    membership = catalog.read("membership")
+    new_transcripts = _prepare(new_transcripts, cfg)
+    lint_df = transcript_lint(new_transcripts) if cfg.lint else None
+    committed = {
+        t: catalog.read(t) for t in ("unique_turns", "membership", "doc_index", "doc_blocks")
+    }
 
     # 1. registry increment (probe bounded by bloom + bucket pruning)
     state: dict = {}
     merged_unique, merged_membership = lifecycle.register_turns_incremental(
-        new_transcripts, unique_turns, membership,
+        new_transcripts, committed["unique_turns"], committed["membership"],
         deps=persisted, bloom_shards=cfg.bloom_shards,
         max_driver_bytes=cfg.bloom_max_driver_bytes, state=state,
     )
@@ -878,115 +954,10 @@ def run_incremental(
     ndocs = _docs_with_bands(new_transcripts, cfg).persist()
     persisted.append(ndocs)
 
-    # 3. exact-fp delta edges: each new doc links to the committed
-    # group minimum for its fp (bucket-pruned probe) + first-writer-wins
-    # links among the batch's own docs
-    new_idx = _with_key_bucket(ndocs.select("conv_id", "exact_fp"), "exact_fp")
-    old_idx = catalog.read("doc_index")
-    old_min = (
-        old_idx.join(
-            new_idx.select("key_bucket", "exact_fp").distinct(),
-            ["key_bucket", "exact_fp"],
-        )
-        .groupBy("key_bucket", "exact_fp")
-        .agg(F.min("conv_id").alias("id_a"))
-    )
-    exact_old = (
-        new_idx.join(old_min, ["key_bucket", "exact_fp"])
-        .where(F.col("id_a") != F.col("conv_id"))
-        .select("id_a", F.col("conv_id").alias("id_b"))
-    )
-    exact_new = blocking.exact_key_pairs(ndocs, "conv_id", "exact_fp")
-    exact_edges = exact_old.union(exact_new).distinct()
+    # 3. the shared core against the committed state
+    _, cands, scored, edges = _resolve_delta(ndocs, cfg, persisted, committed)
 
-    # 4. LSH delta candidates: batch bands probe the committed block
-    # index; the stop-band cap uses committed+batch TOTAL key frequency
-    nblocks = _with_key_bucket(
-        blocking.explode_blocks(ndocs, "conv_id", "bands"), "band_key"
-    ).persist()
-    persisted.append(nblocks)
-    old_blocks = catalog.read("doc_blocks").join(
-        nblocks.select("key_bucket", "band_key").distinct(),
-        ["key_bucket", "band_key"],
-    ).persist()  # pruned to touched keys — small
-    persisted.append(old_blocks)
-    df_total = (
-        nblocks.groupBy("key_bucket", "band_key").agg(F.count("*").alias("dn"))
-        .join(
-            old_blocks.groupBy("key_bucket", "band_key").agg(F.count("*").alias("do")),
-            ["key_bucket", "band_key"], "left",
-        )
-        .select(
-            "key_bucket", "band_key",
-            (F.col("dn") + F.coalesce(F.col("do"), F.lit(0))).alias("df"),
-        )
-    )
-    live_keys = df_total.where(F.col("df") <= cfg.max_block).select(
-        "key_bucket", "band_key"
-    )
-    nb_live = nblocks.join(live_keys, ["key_bucket", "band_key"])
-    # new×old: the probe join (old side bounded by max_block per key);
-    # new×new: the batch's own self-join via the salted machinery
-    cand_no = (
-        nb_live.select("key_bucket", "band_key", F.col("id").alias("_nid"))
-        .join(
-            old_blocks.select(
-                "key_bucket", "band_key", F.col("id").alias("_oid")
-            ),
-            ["key_bucket", "band_key"],
-        )
-        .select(
-            F.least("_nid", "_oid").alias("id_a"),
-            F.greatest("_nid", "_oid").alias("id_b"),
-        )
-    )
-    cand_nn = blocking.candidate_pairs(
-        nb_live.select("id", "band_key"),
-        max_block=cfg.max_block,
-        salt_threshold=cfg.salt_threshold,
-        salt_groups=cfg.salt_groups,
-    )
-    cands = cand_no.union(cand_nn).distinct()
-    # anti-join on the CANONICAL orientation: cands are (least, greatest)
-    # but exact_old edges are (old_group_min, new_id) — when a new id
-    # sorts before the committed group min, a verbatim compare would
-    # miss the pair and re-score an exact duplicate
-    cands = cands.join(
-        exact_edges.select(
-            F.least("id_a", "id_b").alias("ea"),
-            F.greatest("id_a", "id_b").alias("eb"),
-        ),
-        (F.col("id_a") == F.col("ea")) & (F.col("id_b") == F.col("eb")),
-        "left_anti",
-    )
-
-    # 5. scoring over exactly the touched docs: batch docs as computed,
-    # old docs reconstructed from the registry for the candidate ids only
-    pair_ids = cands.select(
-        F.explode(F.array("id_a", "id_b")).alias("conv_id")
-    ).distinct()
-    old_ids = pair_ids.join(ndocs.select("conv_id"), "conv_id", "left_anti")
-    old_docs = normalize.conversation_docs(
-        lifecycle.reconstruct(
-            membership.join(old_ids, "conv_id", "left_semi"), unique_turns
-        )
-    )
-    scoring_docs = ndocs.select("conv_id", "doc", "doc_len").unionByName(
-        old_docs.select("conv_id", "doc", "doc_len")
-    )
-    scored = scoring.score_pairs(
-        cands, scoring_docs,
-        min_len_ratio=cfg.min_len_ratio, k=cfg.shingle_k,
-        decider=cfg.decider, deps=persisted,
-    )
-    sim_edges = scored.where("is_dup").select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    edges = exact_edges.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).union(sim_edges)
-
-    # 6. O(delta) cluster maintenance
+    # 4. O(delta) cluster maintenance
     prev = current_clusters(catalog).select(
         F.col("conv_id").alias("node"), "cluster_id"
     ).persist()
@@ -1005,7 +976,7 @@ def run_incremental(
         F.col("_old").isNull() | (F.col("_old") != F.col("cluster_id"))
     ).select("conv_id", "cluster_id")
 
-    # 7. commit: every table takes an O(delta) append; the clusters log
+    # 5. commit: every table takes an O(delta) append; the clusters log
     # carries a monotone version for the merge-on-read window. The
     # version is PIPELINE-OWNED (max _v in the log + 1), never a backend
     # snapshot id: SnapshotCatalog ids happen to be monotone but Iceberg
@@ -1019,21 +990,12 @@ def run_incremental(
         v = int(prev_v) + 1
     else:
         v = 1
-    catalog.write(
-        "unique_turns",
-        lifecycle.with_fp_bucket(state["new_unique"]),
-        mode="append", partition_by=["fp_bucket"],
-    )
-    catalog.write("membership", state["new_membership"], mode="append")
-    catalog.write("doc_index", new_idx, mode="append", partition_by=["key_bucket"])
-    catalog.write(
-        "doc_blocks",
-        _with_key_bucket(
-            blocking.explode_blocks(ndocs, "conv_id", "bands"), "band_key"
-        ),
-        mode="append", partition_by=["key_bucket"],
+    _commit_docs(
+        catalog, ndocs, state["new_unique"], state["new_membership"], mode="append"
     )
     catalog.write("edges", edges, mode="append")
+    if lint_df is not None:
+        catalog.write("lint", lint_df, mode="append")
     catalog.write(
         "cluster_updates",
         delta_rows.select("conv_id", "cluster_id", F.lit(v).cast("long").alias("_v")),
@@ -1051,5 +1013,6 @@ def run_incremental(
         metrics=new_transcripts.sparkSession.createDataFrame(
             [], "metric string, value double"
         ),
+        lint=lint_df,
         persisted=persisted,
     )

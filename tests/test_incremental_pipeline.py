@@ -10,6 +10,7 @@ tables take append snapshots).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark import fixtures, pipeline
@@ -100,3 +101,60 @@ def test_two_increments_then_compaction(spark, tmp_path):
     assert _assign(current_clusters(cat)) == want
     assert _assign(cat.read("clusters")) == want
     tr.unpersist()
+
+
+def test_fold_of_exact_copy_then_another_fold(spark, tmp_path):
+    """An exact copy of a committed conversation under a new id adds no
+    unique turn, so its fold appends an EMPTY partitioned registry
+    snapshot; the table must stay readable for the next fold."""
+    tr = fixtures.transcripts(spark, n_conv=40).persist()
+    p1, p2 = _split(tr, 2)
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    pipeline.run(p1, catalog=cat).release()
+
+    orig = p1.select("conv_id").orderBy("conv_id").first()["conv_id"]
+    copy = p1.where(F.col("conv_id") == orig).withColumn("conv_id", F.lit("copy-of-" + orig))
+    n_unique = cat.read("unique_turns").count()
+    run_incremental(copy, cat).release()
+    assert cat.read("unique_turns").count() == n_unique
+    run_incremental(p2, cat).release()
+
+    got = _assign(current_clusters(cat))
+    full = pipeline.run(p1.unionByName(copy).unionByName(p2))
+    want = _assign(full.clusters)
+    full.release()
+    assert got == want
+    assert got["copy-of-" + orig] == got[orig]
+    tr.unpersist()
+
+
+def test_run_incremental_refuses_cluster_repair(spark, tmp_path):
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    tr = fixtures.transcripts(spark, n_conv=10)
+    with pytest.raises(ValueError, match="cluster_repair"):
+        run_incremental(tr, cat, pipeline.PipelineConfig(cluster_repair=True))
+
+
+#: Spark jobs one fold takes in the test session: half of
+#: ``fixtures.transcripts(120)`` committed, the other half folded in.
+#: Measured after the fold moved onto run()'s resolve core (one df
+#: window over batch + committed block rows): 185-189 with this file
+#: alone, 197 in the full suite (AQE plans its query stages from runtime
+#: sizes, which the session's earlier caches shift); 401 before.
+FOLD_JOBS = 197
+
+
+def test_fold_job_count_guard(spark, transcripts_small, tmp_path):
+    transcripts_small.count()  # the shared input is cached outside the group
+    p1, p2 = _split(transcripts_small, 2)
+    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    pipeline.run(p1, catalog=cat).release()
+    sc = spark.sparkContext
+    group = "test-fold-job-count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        run_incremental(p2, cat).release()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= FOLD_JOBS + 5, f"run_incremental took {jobs} Spark jobs"

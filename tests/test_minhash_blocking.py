@@ -113,6 +113,47 @@ def test_one_pass_tiers_at_their_boundaries(spark):
         assert {(r["id_a"], r["id_b"]) for r in again.collect()} == expect
 
 
+def test_old_rows_pair_only_with_new_rows(spark):
+    """A fold's blocks: batch rows plus committed rows flagged ``old``.
+    df counts both, so a key pushed past max_block only by its committed
+    rows is stop-banded; pairs are brute force over new×new ∪ new×old,
+    and no old×old pair is emitted."""
+    salt_threshold, max_block = 4, 8
+    # key -> (new rows, old rows)
+    keys = {
+        "k_pushed": (2, max_block - 1),   # df max_block+1, batch alone 2
+        "k_at_cap": (3, max_block - 3),   # df exactly max_block
+        "k_salted": (2, salt_threshold),  # df past salt_threshold
+        "k_new_only": (3, 0),
+        "k_old_only": (0, 4),
+        "k_one_new": (1, 0),
+    }
+    rows = []
+    for j, (k, (n_new, n_old)) in enumerate(keys.items()):
+        rows += [(f"n{(i * 3 + j) % 7}", k, False) for i in range(n_new)]
+        rows += [(f"o{(i * 5 + j) % 11:02d}", k, True) for i in range(n_old)]
+    df = spark.createDataFrame(rows, "id string, band_key string, old boolean")
+    df_of = {k: n + o for k, (n, o) in keys.items()}
+    expect = {
+        (a, b)
+        for a, ka, oa in rows
+        for b, kb, ob in rows
+        if ka == kb and a < b and not (oa and ob) and df_of[ka] <= max_block
+    }
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in blocking.candidate_pairs(
+            df, max_block=max_block, salt_threshold=salt_threshold, salt_groups=3
+        ).collect()
+    }
+    assert got == expect
+    assert not any(a.startswith("o") and b.startswith("o") for a, b in got)
+    # each boundary key is really exercised
+    assert any(a.startswith("n") and b.startswith("o") for a, b in got)
+    assert df_of["k_at_cap"] == max_block and df_of["k_pushed"] == max_block + 1
+    assert keys["k_pushed"][0] <= max_block and df_of["k_salted"] > salt_threshold
+
+
 def test_bloom_preprune_keeps_only_pairable(spark):
     rows = [("a", "k1"), ("b", "k1"), ("c", "k2"), ("d", "k3"), ("e", "k3"), ("f", "k3")]
     df = spark.createDataFrame(rows, "id string, band_key string")

@@ -69,3 +69,53 @@ def test_lint_table_is_committed(spark, tmp_path):
     }
     rows = {r["conv_id"]: r for r in lint.collect()}
     assert len(rows) == 3 and all(r["clean"] for r in rows.values())
+
+
+def _clusters(df):
+    return {r["conv_id"]: r["cluster_id"] for r in df.collect()}
+
+
+def test_run_incremental_scrubs_pii_and_appends_lint(spark, tmp_path):
+    """A fold takes the same hygiene steps as run(): no raw e-mail
+    reaches the committed registry, the folded clusters equal a scrubbed
+    one-shot run over the concatenated input, and the batch's lint rows
+    are appended to the committed lint table."""
+    tr = _pii_transcripts(spark)
+    cfg = pipeline.PipelineConfig(scrub_pii=True, lint=True)
+    catalog = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    pipeline.run(tr.where(F.col("conv_id") == "c1"), cfg, catalog=catalog).release()
+    # c2 scrubs to an exact copy of c1: its fold appends no registry row
+    res = pipeline.run_incremental(tr.where(F.col("conv_id") != "c1"), catalog, cfg)
+    assert {r["conv_id"] for r in res.lint.collect()} == {"c2", "c3"}
+    res.release()
+    lint = {r["conv_id"]: r["clean"] for r in catalog.read("lint").collect()}
+    assert lint == {"c1": True, "c2": True, "c3": True}
+    texts = [r["text"] for r in catalog.read("unique_turns").collect()]
+    assert texts and all("@" not in t for t in texts)
+    assert any("<EMAIL>" in t for t in texts)
+    full = pipeline.run(tr, cfg)
+    want = _clusters(full.clusters)
+    full.release()
+    got = _clusters(pipeline.current_clusters(catalog))
+    assert got == want
+    assert got["c1"] == got["c2"] != got["c3"]
+
+
+def test_link_commits_scrubbed_registry_docs(spark, tmp_path):
+    tr = _pii_transcripts(spark)
+    catalog = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    res = pipeline.link(
+        tr.where(F.col("conv_id") == "c2"),
+        tr.where(F.col("conv_id") != "c2"),
+        pipeline.PipelineConfig(scrub_pii=True, link_mode="many_to_one"),
+        catalog=catalog,
+    )
+    links = {(r["conv_id_a"], r["conv_id_b"]) for r in res.links.collect()}
+    res.release()
+    docs = {r["conv_id"]: r["doc"] for r in catalog.read("link_registry_docs").collect()}
+    assert set(docs) == {"c1", "c3"} and all("@" not in d for d in docs.values())
+    # docs are normalized text ('@' and '.' become spaces): the address
+    # itself must be gone, replaced by the redaction token
+    assert "alice example com" not in docs["c1"] and "contact email" in docs["c1"]
+    # scrubbed, the probe is an exact copy of c1
+    assert links == {("c2", "c1")}
