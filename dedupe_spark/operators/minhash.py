@@ -61,14 +61,8 @@ def _shingles_from_th(th: Column, doc: Column, k: int) -> Column:
 
     ``th`` is referenced ~k+2 times (size + k shifted slices); when it
     is an inline transform expression each reference re-runs the
-    tokenize+hash transform per row. Binding it as a real column first
-    trades those recomputes for one array materialization — 1.8x faster
-    on an isolated shingle scan of sf0.1 documents, but NEUTRAL inside
-    the full pipeline at both local[4]x520k turns (121.9s inline vs
-    118.5s bound) and local[32]x70k (18.4 vs 18.7): the signature UDF
-    and candidate join dominate, and the materialization costs DRAM
-    bandwidth the recompute does not. ``with_minhash_bands`` exposes
-    ``bind_token_hashes`` (default off) for compute-bound deployments."""
+    tokenize+hash transform per row, so a caller that can bind it as a
+    real column first (``scoring.score_pairs``) does."""
     n = F.size(th)
     m = n - F.lit(k - 1)  # shingle count when n >= k
     folded = F.slice(th, 1, m)
@@ -175,7 +169,7 @@ def with_minhash_bands(
     bands: int = DEFAULT_BANDS,
     seed: int = DEFAULT_SEED,
     keep_shingles: bool = False,
-    bind_token_hashes: bool = False,
+    skip: Column | None = None,
 ) -> DataFrame:
     """docs + ``bands`` column (array<string> of LSH keys).
 
@@ -184,23 +178,22 @@ def with_minhash_bands(
     family, scoring.shingle_array) reuses the one computation instead of
     re-deriving it per join side. Costs ~O(doc tokens)*8 bytes per cached
     row; the pipeline opts in because its docs table is persisted anyway.
+
+    ``skip``: boolean column; rows where it is true get empty ``bands``
+    and ``sh`` (exact keys only). They hand the signature UDF an empty
+    shingle array, for which it returns the zero sentinel without
+    hashing, so every row goes through one projection and the frame
+    keeps its input's single shuffle.
     """
     sig_udf = make_minhash_udf(num_perm=num_perm, seed=seed)
-    c = F.col(doc_col) if isinstance(doc_col, str) else doc_col
-    if bind_token_hashes:
-        # token-hash array bound as a real column BEFORE the shingle
-        # fold: trades ~k+1 recomputes for one array materialization
-        # (write+read between projections) — a win when compute-bound,
-        # neutral-to-negative when memory-bandwidth-bound (A/B in
-        # _shingles_from_th's docstring); default off.
-        out = docs.withColumn(
-            "_th", F.transform(F.split(c, " "), lambda t: F.xxhash64(t))
-        ).withColumn("_shingles", _shingles_from_th(F.col("_th"), c, k))
-    else:
-        out = docs.withColumn("_shingles", shingle_hashes(c, k=k))
-    out = out.withColumn("_sig", sig_udf("_shingles")).withColumn(
-        "bands", band_keys("_sig", bands=bands, num_perm=num_perm)
-    )
+    shingles = shingle_hashes(doc_col, k=k)
+    if skip is not None:
+        shingles = F.when(skip, F.array().cast("array<long>")).otherwise(shingles)
+    out = docs.withColumn("_shingles", shingles).withColumn("_sig", sig_udf("_shingles"))
+    bands_col = band_keys("_sig", bands=bands, num_perm=num_perm)
+    if skip is not None:
+        bands_col = F.when(skip, F.array().cast("array<string>")).otherwise(bands_col)
+    out = out.withColumn("bands", bands_col)
     if keep_shingles:
         out = out.withColumn("sh", F.array_distinct("_shingles"))
-    return out.drop("_th", "_shingles", "_sig")
+    return out.drop("_shingles", "_sig")

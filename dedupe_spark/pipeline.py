@@ -140,31 +140,16 @@ def _docs_with_bands(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     blocking keys from the same text — key parity is what makes the
     incremental candidate probe equivalent to the batch self-join.
     """
-    docs = normalize.conversation_docs(transcripts)
-    docs = docs.withColumn("exact_fp", F.md5("doc"))
-    if cfg.aac_policy:
-        # C4 dispatch: tool-dominated conversations skip the signature
-        # UDF entirely (empty band set -> exact-fp edges only); the
-        # identical agg subtrees under both filters collapse via
-        # Catalyst's ReuseExchange, so this costs no extra shuffle
-        is_exact_only = F.col("tool_frac") >= F.lit(cfg.aac_exact_tool_frac)
-        dyn = minhash.with_minhash_bands(
-            docs.where(~is_exact_only),
-            "doc", k=cfg.shingle_k, num_perm=cfg.num_perm, bands=cfg.bands, seed=cfg.seed,
-            keep_shingles=True,
-        )
-        # exact-only docs never reach LSH blocking (empty band set) so
-        # their shingle array is never read — an empty placeholder keeps
-        # the union schema aligned without paying for shingles
-        stat = (
-            docs.where(is_exact_only)
-            .withColumn("bands", F.array().cast("array<string>"))
-            .withColumn("sh", F.array().cast("array<long>"))
-        )
-        return dyn.unionByName(stat)
+    docs = normalize.conversation_docs(transcripts).withColumn("exact_fp", F.md5("doc"))
+    # C4 dispatch: tool-dominated conversations get an empty band set
+    # (exact-fp edges only) and no shingles, in the same projection as
+    # every other row — one conv_id shuffle feeds the signature UDF
+    skip = (
+        F.col("tool_frac") >= F.lit(cfg.aac_exact_tool_frac) if cfg.aac_policy else None
+    )
     return minhash.with_minhash_bands(
         docs, "doc", k=cfg.shingle_k, num_perm=cfg.num_perm, bands=cfg.bands, seed=cfg.seed,
-        keep_shingles=True,
+        keep_shingles=True, skip=skip,
     )
 
 

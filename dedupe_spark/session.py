@@ -63,6 +63,15 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Let AQE coalesce the stages that build persisted frames too
+        # (docs, repeated_blocks): by default Spark keeps them at
+        # spark.sql.shuffle.partitions, and at small inputs each extra
+        # task (a pandas-UDF task pays a Python worker round trip) costs
+        # more than its rows. Spark documents the cost: a read of cached
+        # data may then need an extra shuffle. With broadcast joins off,
+        # as a stand-in for large inputs, run() on transcripts(120) went
+        # from 29 to 30 stages; at bench sizes it runs one fewer.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Runtime bloom-filter join: Spark injects a bloom filter built from
         # the small join side into the large side's scan — the engine-level
         # analog of the reference's HashDB bloom negative-lookup

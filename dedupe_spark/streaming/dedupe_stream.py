@@ -15,12 +15,17 @@ external broker needed.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from dedupe_spark import schemas
+
+if TYPE_CHECKING:
+    from dedupe_spark.pipeline import PipelineConfig
 
 
 def read_transcript_stream(spark: SparkSession, path: str, max_files: int = 16) -> DataFrame:
@@ -41,6 +46,7 @@ def stream_register_turns(
     synchronous: bool = True,
     compact_every: int = 0,
     n_buckets: int | None = None,
+    config: PipelineConfig | None = None,
 ):
     """Continuous registry ingest: ``foreachBatch`` drives
     ``register_turns_incremental`` so the stream maintains the SAME
@@ -75,6 +81,11 @@ def stream_register_turns(
     the registry's read-side file count is bounded by N·batch instead of
     growing with the whole ingest history.
 
+    Every micro-batch first goes through the pipeline's one hygiene
+    step, ``pipeline._prepare`` under ``config`` (defaults when None),
+    so ``scrub_pii`` holds for streamed ingest as it does for batch: no
+    raw identifier reaches the registry.
+
     Returns the StreamingQuery (already drained when ``synchronous``).
     """
     import os
@@ -86,6 +97,9 @@ def stream_register_turns(
         register_turns_incremental,
         with_fp_bucket,
     )
+    from dedupe_spark.pipeline import PipelineConfig, _prepare
+
+    cfg = config or PipelineConfig()
 
     # one modulus for the bootstrap layout, every probe, and every delta
     # append — a mismatch anywhere silently misses existing fps
@@ -94,6 +108,7 @@ def stream_register_turns(
     stream = read_transcript_stream(spark, input_path, max_files=max_files)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = _prepare(batch_df, cfg)
         if not catalog.exists("unique_turns"):
             # first batch bootstraps the tables (snapshot 1); the
             # registry is laid out bucket-partitioned on fp (SURVEY §1.2

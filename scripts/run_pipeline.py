@@ -100,16 +100,32 @@ def main() -> None:
 
     spark = build_session(app_name="dedupe_pipeline", master=args.master)
 
+    if args.catalog == "iceberg":
+        catalog = IcebergCatalog(spark)
+    else:
+        catalog = SnapshotCatalog(spark, args.output)
+    cfg = PipelineConfig(
+        checkpoint_dir=args.checkpoint_dir,
+        resume=args.resume,
+        bloom_mode=args.bloom_mode,
+        bloom_shards=args.bloom_shards,
+        decider=args.decider,
+        aac_policy=not args.no_aac,
+        scrub_pii=args.scrub_pii,
+        lint=args.lint,
+        # --link-incremental cannot assign 1:1 batch-locally, so its
+        # default differs; an explicit one_to_one there is rejected by
+        # link_incremental with a clear error
+        link_mode=args.link_mode
+        or ("many_to_one" if args.link_incremental else "one_to_one"),
+    )
+
     if args.stream_input:
         # continuous registry ingest: the streaming shape of register_file
         # (S3) — availableNow drains whatever is in the directory now and
         # exits; re-running picks up new files from the stream checkpoint.
         from dedupe_spark.streaming.dedupe_stream import stream_register_turns
 
-        if args.catalog == "iceberg":
-            catalog = IcebergCatalog(spark)
-        else:
-            catalog = SnapshotCatalog(spark, args.output)
         t0 = time.time()
         stream_register_turns(
             spark,
@@ -119,6 +135,7 @@ def main() -> None:
             bloom_path=args.bloom_path,
             max_files=args.max_files_per_batch,
             compact_every=args.compact_every,
+            config=cfg,
         )
         out = {"wall_sec": round(time.time() - t0, 2), "warehouse": args.output}
         for t in ("unique_turns", "membership"):
@@ -141,26 +158,6 @@ def main() -> None:
         transcripts = read_transcript_dir(spark, args.input_dir)
     else:
         ap.error("one of --input / --input-dir / --fixture-convs is required")
-
-    if args.catalog == "iceberg":
-        catalog = IcebergCatalog(spark)
-    else:
-        catalog = SnapshotCatalog(spark, args.output)
-    cfg = PipelineConfig(
-        checkpoint_dir=args.checkpoint_dir,
-        resume=args.resume,
-        bloom_mode=args.bloom_mode,
-        bloom_shards=args.bloom_shards,
-        decider=args.decider,
-        aac_policy=not args.no_aac,
-        scrub_pii=args.scrub_pii,
-        lint=args.lint,
-        # --link-incremental cannot assign 1:1 batch-locally, so its
-        # default differs; an explicit one_to_one there is rejected by
-        # link_incremental with a clear error
-        link_mode=args.link_mode
-        or ("many_to_one" if args.link_incremental else "one_to_one"),
-    )
 
     t0 = time.time()
     if args.link_incremental:

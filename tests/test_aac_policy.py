@@ -51,3 +51,41 @@ def test_tool_dominated_convs_link_exact_only(spark):
 def test_policy_off_links_near_duplicates(spark):
     cl = _clusters(spark, aac_policy=False)
     assert cl["t_base"] == cl["t_exact"] == cl["t_near"]
+
+
+def _mixed_run(spark):
+    tr = _tr(
+        spark,
+        [
+            ("t_base", "tool", _BASE),
+            ("t_near", "tool", _NEAR),
+            ("u_base", "user", _BASE),
+            ("u_near", "user", _NEAR),
+        ],
+    )
+    return pipeline.run(tr, pipeline.PipelineConfig(aac_policy=True))
+
+
+def test_tool_dominated_docs_get_no_bands_or_shingles(spark):
+    res = _mixed_run(spark)
+    rows = {r["conv_id"]: r for r in res.docs.select("conv_id", "bands", "sh").collect()}
+    res.release()
+    for cid in ("t_base", "t_near"):
+        assert rows[cid]["bands"] == [] and rows[cid]["sh"] == []
+    for cid in ("u_base", "u_near"):
+        assert len(rows[cid]["bands"]) == pipeline.PipelineConfig().bands
+        assert len(rows[cid]["sh"]) > 0
+
+
+def test_docs_stage_is_one_branch(spark):
+    """The policy splits rows inside one projection: the materialized
+    docs plan runs the signature UDF once over one conv_id shuffle."""
+    import re
+
+    res = _mixed_run(spark)
+    res.docs.count()
+    plan = res.docs._jdf.queryExecution().executedPlan().treeString()
+    res.release()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1, final
+    assert len(re.findall(r"Exchange hashpartitioning\(conv_id#", final)) == 1, final

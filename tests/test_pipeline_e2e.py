@@ -130,17 +130,40 @@ def test_pairwise_f1_with_cluster_repair(spark, result):
 #: this size pays for its job count, not its rows.
 RUN_JOBS = 29
 
+#: Tasks the same run completes, measured after the docs stage became
+#: one branch and AQE was allowed to coalesce the stages that build
+#: cached frames (279-295 before). At this size each task wave costs
+#: more than the rows it processes.
+RUN_TASKS = 42
 
-def test_run_job_count_guard(spark, transcripts_small):
-    transcripts_small.count()  # the shared input is cached outside the group
+
+def _run_job_ids(spark, transcripts, group: str) -> list[int]:
+    """Job ids of one uncommitted ``pipeline.run`` over ``transcripts``,
+    run under job group ``group``."""
+    transcripts.count()  # the shared input is cached outside the group
     sc = spark.sparkContext
-    group = "test-run-job-count"
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
-        res = pipeline.run(transcripts_small)
+        res = pipeline.run(transcripts)
         res.clusters.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     res.release()
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_run_job_count_guard(spark, transcripts_small):
+    jobs = len(_run_job_ids(spark, transcripts_small, "test-run-job-count"))
     assert jobs <= RUN_JOBS + 5, f"pipeline.run took {jobs} Spark jobs"
+
+
+def test_run_task_count_guard(spark, transcripts_small):
+    tracker = spark.sparkContext.statusTracker()
+    stages = {
+        sid for job in _run_job_ids(spark, transcripts_small, "test-run-task-count")
+        for sid in tracker.getJobInfo(job).stageIds
+    }
+    tasks = sum(
+        st.numCompletedTasks for st in map(tracker.getStageInfo, stages) if st is not None
+    )
+    assert tasks <= RUN_TASKS + 18, f"pipeline.run completed {tasks} Spark tasks"

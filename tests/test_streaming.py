@@ -269,3 +269,41 @@ def test_stream_register_compact_every_bounds_read_view(spark, tmp_path):
         map(tuple, tr.select("conv_id", "turn_idx", "text").collect())
     )
     tr.unpersist()
+
+
+def test_stream_register_turns_scrubs_pii(spark, tmp_path):
+    """Streamed ingest honours ``scrub_pii`` like the batch entry points:
+    neither the bootstrap batch nor an append batch commits a raw e-mail
+    address to ``unique_turns``."""
+    import os
+    import time
+    from datetime import datetime
+
+    from dedupe_spark import schemas
+    from dedupe_spark.catalog import SnapshotCatalog
+    from dedupe_spark.pipeline import PipelineConfig
+
+    src = tmp_path / "pii_src"
+    src.mkdir()
+    now = time.time()
+    for i in range(2):
+        rows = [
+            (f"c{i}", 0, "user", f"mail me at user{i}@example.com please", None,
+             datetime(2026, 1, 1, 12, 0, 0)),
+            (f"c{i}", 1, "assistant", "sure, noted", None, datetime(2026, 1, 1, 12, 0, 1)),
+        ]
+        d = src / f"f{i}"
+        spark.createDataFrame(rows, schemas.TRANSCRIPTS).coalesce(1).write.parquet(str(d))
+        for f in os.listdir(d):
+            os.utime(os.path.join(d, f), (now - 60 + 60 * i, now - 60 + 60 * i))
+
+    catalog = SnapshotCatalog(spark, str(tmp_path / "wh"))
+    stream_register_turns(
+        spark, str(src / "*"), catalog, checkpoint_dir=str(tmp_path / "ck"), max_files=1,
+        config=PipelineConfig(scrub_pii=True),
+    )
+    assert catalog.current_snapshot_id("unique_turns") >= 2  # bootstrap + append
+    texts = [r["text"] for r in catalog.read("unique_turns").select("text").collect()]
+    assert not any("@" in t for t in texts), texts
+    # the mail turns differ only in the address: scrubbed, they are one turn
+    assert sorted(texts) == ["mail me at <EMAIL> please", "sure, noted"]
