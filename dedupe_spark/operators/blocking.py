@@ -28,7 +28,9 @@ bounded by chunk-size math):
   under the cap) are split into G deterministic sub-groups; the left
   side keeps its salt, the right side replicates across salts, so one
   hot bucket's pair enumeration spreads over G partitions instead of
-  pinning one task. Salt = pmod(xxhash64(id), G) — reproducible.
+  pinning one task. Salt = pmod(xxhash64(id), G) — reproducible. Cold
+  keys take salt 0 on both sides, so one join on (key, salt) serves
+  both tiers.
 - AQE skew-join (session config) splits whatever residual skew remains.
 """
 
@@ -115,8 +117,8 @@ def bloom_preprune(
         .where(F.col("df") >= 2)
         .select("band_key")
     )
-    # the pruned table is read once per branch downstream (the cold and
-    # hot join tiers of candidate_pairs each re-read its df window); when
+    # the pruned table is read once per branch downstream (both sides of
+    # candidate_pairs' self-join re-read its df window); when
     # the caller hands us a deps list, cache it so the probe UDF (or the
     # semi join) runs ONCE instead of per branch — measured 1.6-2x on the
     # fast-path queries, and at scale it removes 4 redundant Arrow
@@ -169,45 +171,37 @@ def _tiered_pairs(
     salt_groups: int,
     require_lt: bool,
 ) -> DataFrame:
-    """Shared salted two-tier band-key join: ``a``/``b`` are
-    (band_key, id, hot) block tables already restricted to live (non-
-    stop-banded) keys, with ``hot`` the key's skew measure. Cold keys
-    join plainly; hot keys go through the salted tier — the A side
-    keeps a deterministic salt, the B side replicates to every salt
-    value, so each (a, b) meets exactly once — at partition
-    (band_key, salt(a)) — and a hot key's work spreads over
-    ``salt_groups`` tasks. ``require_lt`` adds the self-join's
-    id_a < id_b orientation; cross-table callers pass False (their
-    sides are distinct namespaces).
+    """Shared salted band-key join: ``a``/``b`` are (band_key, id, hot)
+    block tables already restricted to live (non-stop-banded) keys, with
+    ``hot`` the key's skew measure — the same value on both sides. One
+    join on (band_key, salt) serves both tiers: a hot key (``hot >
+    salt_threshold``) gives its A rows a deterministic salt and
+    replicates its B rows to every salt value, a cold key gives every
+    row salt 0. Each (a, b) meets exactly once — at (band_key, salt(a))
+    — and a hot key's work spreads over ``salt_groups`` tasks (the DS2
+    split). The decision is per key, so both sides of a key always take
+    the same tier. ``require_lt`` adds the self-join's id_a < id_b
+    orientation; cross-table callers pass False (their sides are
+    distinct namespaces).
 
     Rows with a boolean ``old`` column set (committed state a fold
     probes, see :func:`candidate_pairs`) pair only with unset rows."""
     orient = (F.col("id_a") < F.col("id_b")) if require_lt else F.lit(True)
     flagged = "old" in a.columns
-
-    def side(df: DataFrame, s: str, *extra) -> DataFrame:
-        old = [F.col("old").alias(f"old_{s}")] if flagged else []
-        return df.select("band_key", F.col("id").alias(f"id_{s}"), *old, *extra)
-
     if flagged:
         orient = orient & ~(F.col("old_a") & F.col("old_b"))
 
-    cold = F.col("hot") <= salt_threshold
-    pairs_cold = side(a.where(cold), "a").join(side(b.where(cold), "b"), "band_key").where(orient)
+    def side(df: DataFrame, s: str, salt: str) -> DataFrame:
+        old = [F.col("old").alias(f"old_{s}")] if flagged else []
+        return df.select(
+            "band_key", F.col("id").alias(f"id_{s}"), *old, F.expr(salt).alias("salt")
+        )
 
-    salt = F.pmod(F.xxhash64("id"), F.lit(salt_groups)).cast("int")
-    a2 = side(a.where(~cold), "a", salt.alias("salt"))
-    b2 = side(
-        b.where(~cold), "b",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_groups - 1))).alias("salt"),
-    )
-    pairs_hot = a2.join(b2, ["band_key", "salt"]).where(orient)
-
-    return (
-        pairs_cold.select("id_a", "id_b")
-        .union(pairs_hot.select("id_a", "id_b"))
-        .distinct()
-    )
+    hot = f"hot > {salt_threshold}"
+    salt_a = f"CASE WHEN {hot} THEN CAST(pmod(xxhash64(id), {salt_groups}) AS INT) ELSE 0 END"
+    salt_b = f"explode(CASE WHEN {hot} THEN sequence(0, {salt_groups - 1}) ELSE array(0) END)"
+    pairs = side(a, "a", salt_a).join(side(b, "b", salt_b), ["band_key", "salt"])
+    return pairs.where(orient).select("id_a", "id_b").distinct()
 
 
 def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
@@ -219,8 +213,8 @@ def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
     the key, with no separate frequency aggregate to join back. The
     window's exchange also partitions the rows for the self-join that
     reads them. ``deps``: optional list that receives the result,
-    persisted, so the tiers of :func:`candidate_pairs` and the caller's
-    metrics read one computed copy."""
+    persisted, so both sides of :func:`candidate_pairs`' join and the
+    caller's metrics read one computed copy."""
     counted = blocks.select(
         "*", F.count("*").over(Window.partitionBy("band_key")).alias("df")
     ).where(F.col("df") >= 2)
@@ -242,10 +236,11 @@ def candidate_pairs(
     ``blocks`` is (id, band_key) rows, or the output of
     :func:`repeated_blocks` when the caller also needs the df column;
     otherwise it is computed here (persisted into ``deps`` when given).
-    Three frequency tiers per key, all read off that one df column:
+    Three frequency tiers per key, all read off that one df column, the
+    last two in one self-join on (band_key, salt):
       df > max_block        -> dropped (stop band; counted by caller)
-      salt_threshold < df   -> salted self-join (hot keys spread over G tasks)
-      otherwise             -> plain self-join
+      salt_threshold < df   -> salted (hot keys spread over G tasks)
+      otherwise             -> salt 0 (a plain key join)
 
     A fold (``pipeline.run_incremental``) hands the batch's rows plus the
     committed rows of the keys it touches, the latter with a boolean

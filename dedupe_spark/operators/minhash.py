@@ -33,8 +33,15 @@ DEFAULT_BANDS = 32  # 32 bands x 4 rows: s-curve threshold ~ (1/32)^(1/4) ~ 0.42
 DEFAULT_SEED = 42
 
 
-def shingle_hashes(doc: Column | str, k: int = 3) -> Column:
-    """array<long> of hashes of token k-shingles — pure JVM exprs, O(T).
+def _token_hashes(doc: str) -> str:
+    """SQL for the array<long> of xxhash64s of ``doc``'s space-split
+    tokens (``doc`` is a column name)."""
+    return f"transform(split(`{doc}`, ' '), t -> xxhash64(t))"
+
+
+def shingle_hashes(doc: str, k: int = 3) -> Column:
+    """array<long> of hashes of token k-shingles of column ``doc`` —
+    pure JVM exprs, O(T).
 
     Each token is xxhash64'd once, then the k consecutive token hashes of
     a shingle are folded with chained two-arg xxhash64 via ``zip_with``
@@ -50,25 +57,27 @@ def shingle_hashes(doc: Column | str, k: int = 3) -> Column:
     For docs with < k tokens the whole doc is the single shingle, so no
     row produces an empty array.
     """
-    c = F.col(doc) if isinstance(doc, str) else doc
-    toks = F.split(c, " ")
-    th = F.transform(toks, lambda t: F.xxhash64(t))
-    return _shingles_from_th(th, c, k)
+    return _shingles_from_th(_token_hashes(doc), f"`{doc}`", k)
 
 
-def _shingles_from_th(th: Column, doc: Column, k: int) -> Column:
-    """Fold a token-hash array into k-shingle hashes.
+def _shingles_from_th(th: str, doc: str, k: int) -> Column:
+    """Fold a token-hash array into k-shingle hashes. ``th`` and ``doc``
+    are SQL expressions (a backquoted column name, or ``_token_hashes``).
+
+    The fold is built as one SQL string and parsed by one ``F.expr``:
+    composing it from Column calls costs a driver-to-JVM round trip per
+    node.
 
     ``th`` is referenced ~k+2 times (size + k shifted slices); when it
     is an inline transform expression each reference re-runs the
     tokenize+hash transform per row, so a caller that can bind it as a
     real column first (``scoring.score_pairs``) does."""
-    n = F.size(th)
-    m = n - F.lit(k - 1)  # shingle count when n >= k
-    folded = F.slice(th, 1, m)
+    n = f"size({th})"
+    m = f"{n} - {k - 1}"  # shingle count when n >= k
+    folded = f"slice({th}, 1, {m})"
     for j in range(1, k):
-        folded = F.zip_with(folded, F.slice(th, j + 1, m), lambda a, b: F.xxhash64(a, b))
-    return F.when(n >= k, folded).otherwise(F.array(F.xxhash64(doc)))
+        folded = f"zip_with({folded}, slice({th}, {j + 1}, {m}), (x, y) -> xxhash64(x, y))"
+    return F.expr(f"CASE WHEN {n} >= {k} THEN {folded} ELSE array(xxhash64({doc})) END")
 
 
 def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -126,8 +135,8 @@ def make_minhash_udf(num_perm: int = DEFAULT_NUM_PERM, seed: int = DEFAULT_SEED)
     return minhash_sig
 
 
-def band_keys(sig: Column | str, bands: int = DEFAULT_BANDS, num_perm: int = DEFAULT_NUM_PERM) -> Column:
-    """array<string> LSH band keys from a signature — JVM-side.
+def band_keys(sig: str, bands: int = DEFAULT_BANDS, num_perm: int = DEFAULT_NUM_PERM) -> Column:
+    """array<string> LSH band keys from signature column ``sig`` — JVM-side.
 
     Key = "b<i>:" + xxhash64 over the band's r signature longs plus the
     band index, so keys from different bands never collide (the
@@ -137,8 +146,11 @@ def band_keys(sig: Column | str, bands: int = DEFAULT_BANDS, num_perm: int = DEF
     codegen — the earlier slice/transform/concat_ws form was an
     interpreted higher-order-function tree and measured several times
     slower at 5k docs x 32 bands.
+
+    The ``bands`` keys are one SQL string parsed by one ``F.expr``: built
+    from Column calls, each band cost ~60 driver-to-JVM round trips,
+    about a third of those a whole ``pipeline.run`` plan makes.
     """
-    c = F.col(sig) if isinstance(sig, str) else sig
     if num_perm % bands != 0 or bands > num_perm:
         # bands > num_perm gives r=0 (every doc shares every key — the
         # stop band then drops ALL candidates with no error); a
@@ -148,17 +160,12 @@ def band_keys(sig: Column | str, bands: int = DEFAULT_BANDS, num_perm: int = DEF
             f"num_perm ({num_perm}) must be a positive multiple of bands ({bands})"
         )
     r = num_perm // bands
-    return F.array(
-        *[
-            F.concat(
-                F.lit(f"b{i}:"),
-                F.xxhash64(
-                    *[F.element_at(c, i * r + j + 1) for j in range(r)], F.lit(i)
-                ).cast("string"),
-            )
-            for i in range(bands)
-        ]
-    )
+
+    def key(i: int) -> str:
+        longs = ", ".join(f"element_at(`{sig}`, {i * r + j + 1})" for j in range(r))
+        return f"concat('b{i}:', cast(xxhash64({longs}, {i}) as string))"
+
+    return F.expr(f"array({', '.join(key(i) for i in range(bands))})")
 
 
 def with_minhash_bands(
@@ -174,9 +181,9 @@ def with_minhash_bands(
     """docs + ``bands`` column (array<string> of LSH keys).
 
     ``keep_shingles=True`` additionally keeps ``sh`` — the distinct
-    shingle-hash array — so downstream pair scoring (the same shingle
-    family, scoring.shingle_array) reuses the one computation instead of
-    re-deriving it per join side. Costs ~O(doc tokens)*8 bytes per cached
+    shingle-hash array — so downstream pair scoring
+    (``scoring.score_pairs``, the same shingle family) reuses the one
+    computation instead of re-deriving it per join side. Costs ~O(doc tokens)*8 bytes per cached
     row; the pipeline opts in because its docs table is persisted anyway.
 
     ``skip``: boolean column; rows where it is true get empty ``bands``

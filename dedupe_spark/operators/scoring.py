@@ -37,17 +37,6 @@ MIN_LEN_RATIO = 0.40  # length-band prefilter (blocks_cmp length check)
 LEV_PREFIX_CAP = 2000  # bound the O(n*m) DP: compare first N chars only
 
 
-def shingle_array(doc: Column, k: int = 3) -> Column:
-    """Distinct xxhash64 token-k-shingle hashes — JVM exprs only.
-
-    Same shingle family the MinHash blocking stage hashes
-    (operators/minhash.py:shingle_hashes), deduplicated for set algebra.
-    """
-    from dedupe_spark.operators.minhash import shingle_hashes
-
-    return F.array_distinct(shingle_hashes(doc, k=k))
-
-
 def jaccard_expr(sh_a: Column, sh_b: Column) -> Column:
     """|A∩B| / |A∪B| over hashed shingle arrays (codegen'd set ops)."""
     inter = F.size(F.array_intersect(sh_a, sh_b)).cast("double")
@@ -335,22 +324,18 @@ def score_pairs(
         # bind the token-hash array before the shingle fold: the fold
         # references it k+2 times, and each inline reference re-runs the
         # tokenize+hash transform per row (interpreted HOF)
-        from dedupe_spark.operators.minhash import _shingles_from_th
+        from dedupe_spark.operators.minhash import _shingles_from_th, _token_hashes
 
         d = docs.select(
             F.col(id_col).alias("_id"),
             F.col(doc_col).alias("_doc"),
             F.col("doc_len").alias("_len"),
-            F.transform(
-                F.split(F.col(doc_col), " "), lambda t: F.xxhash64(t)
-            ).alias("_th"),
+            F.expr(_token_hashes(doc_col)).alias("_th"),
         ).select(
             "_id",
             "_doc",
             "_len",
-            F.array_distinct(
-                _shingles_from_th(F.col("_th"), F.col("_doc"), k)
-            ).alias("_sh"),
+            F.array_distinct(_shingles_from_th("`_th`", "`_doc`", k)).alias("_sh"),
         )
     joined = (
         pairs.join(

@@ -6,7 +6,8 @@ batch job:
 
   transcripts
     -> _prepare: PII scrub (the one hygiene step)            [C4]
-    -> register_turns (unique-turn registry + membership)     [D1]
+    -> register_turns (unique-turn registry + membership,
+       built when commit() or the caller reads it)            [D1]
     -> conversation docs (stable turn order)                  [S6 analog]
     -> blocking keys: exact md5 + MinHash/LSH bands           [C1, C2]
     -> one band-key df pass + salted skew-aware self-join     [I1, D1]
@@ -25,7 +26,9 @@ share its stages (``_prepare``, ``_drop_exact``, ``_score``) but keep
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -90,7 +93,9 @@ class PipelineConfig:
     cluster_repair_strong: float = 0.9
     checkpoint_dir: str | None = None
     resume: bool = False
-    # metrics cost ~6 extra jobs (counts); opt in when publishing a run
+    # metrics cost ~25 extra Spark jobs (each count re-executes its
+    # frame): 48 against 23 for run() on fixtures.build_plan(300), 4
+    # cores; opt in when publishing a run
     compute_metrics: bool = False
     # A↔B linkage assignment mode (pipeline.link only):
     #   "one_to_one"  — exact links assigned by per-fingerprint rank-zip
@@ -117,17 +122,31 @@ class PipelineResult:
     scored_pairs: DataFrame
     candidate_pairs: DataFrame
     docs: DataFrame
-    unique_turns: DataFrame
-    membership: DataFrame
     metrics: DataFrame
+    #: builds (unique_turns, membership), called on the first read of
+    #: either: a run whose registry nothing reads never plans it
+    registry: Callable[[], tuple[DataFrame, DataFrame]]
     lint: DataFrame | None = None
     persisted: list = field(default_factory=list)
 
+    @cached_property
+    def _registry(self) -> tuple[DataFrame, DataFrame]:
+        return self.registry()
+
+    @property
+    def unique_turns(self) -> DataFrame:
+        return self._registry[0]
+
+    @property
+    def membership(self) -> DataFrame:
+        return self._registry[1]
+
     def release(self) -> None:
-        """Unpersist every intermediate this run cached. Call after the
-        final action on the result DataFrames — repeated pipeline runs in
-        one session (bench, notebooks) otherwise accumulate cached tables
-        in executor memory."""
+        """Unpersist every intermediate this run cached (the registry's
+        too, once built). Call after the final action on the result
+        DataFrames — repeated pipeline runs in one session (bench,
+        notebooks) otherwise accumulate cached tables in executor
+        memory."""
         for df in self.persisted:
             df.unpersist()
         self.persisted.clear()
@@ -292,19 +311,16 @@ def run(
     transcripts = _prepare(transcripts, cfg)
     lint_df = transcript_lint(transcripts) if cfg.lint else None
 
-    # 1. turn-level registry (exact dedup of turns, the reference's core)
-    unique_turns, membership = lifecycle.register_turns(transcripts, deps=persisted)
-
-    # 2. conversation documents in stable (conv_id, turn_idx) order
+    # 1. conversation documents in stable (conv_id, turn_idx) order
     docs = _docs_with_bands(transcripts, cfg)
     # the doc table is reused by blocking AND scoring — cache it once
     docs = docs.persist()
     persisted.append(docs)
 
-    # 3-5. exact pairs, candidates, scoring, edges
+    # 2-4. exact pairs, candidates, scoring, edges
     blocks, cands, scored, edges = _resolve_delta(docs, cfg, persisted)
 
-    # 6. transitive clustering
+    # 5. transitive clustering
     # durable-by-default iteration state: when this run has a catalog,
     # CC snapshots land under its warehouse — localCheckpoint state dies
     # with an executor at real scale, a warehouse parquet snapshot doesn't
@@ -333,9 +349,10 @@ def run(
         scored_pairs=scored,
         candidate_pairs=cands,
         docs=docs,
-        unique_turns=unique_turns,
-        membership=membership,
         metrics=metrics,
+        # 6. turn-level registry (exact dedup of turns, the reference's
+        # core) of the scrubbed transcripts; commit() reads it
+        registry=lambda: lifecycle.register_turns(transcripts, deps=persisted),
         lint=lint_df,
         persisted=persisted,
     )
@@ -773,14 +790,18 @@ def _metrics(docs, blocks, cands, scored, clusters, cfg) -> DataFrame:
         F.count_distinct(F.when(stop, F.col("band_key"))).alias("stop_keys"),
         F.count(F.when(stop, 1)).alias("stop_rows"),
     ).first()
+    # one execution of the scoring plan for both scored counts
+    sc = scored.agg(
+        F.count("*").alias("n"), F.count_if(F.col("is_dup")).alias("dup")
+    ).first()
     rows = [
         ("n_conversations", float(docs.count())),
         ("n_block_rows_after_prune", float(b["rows"])),
         ("n_stopband_keys_dropped", float(b["stop_keys"])),
         ("n_stopband_rows_dropped", float(b["stop_rows"])),
         ("n_candidate_pairs", float(cands.count())),
-        ("n_scored_pairs", float(scored.count())),
-        ("n_duplicate_pairs", float(scored.where("is_dup").count())),
+        ("n_scored_pairs", float(sc["n"])),
+        ("n_duplicate_pairs", float(sc["dup"])),
         ("n_clusters", float(clusters.select("cluster_id").distinct().count())),
     ]
     return spark.createDataFrame(rows, "metric string, value double")
@@ -993,11 +1014,10 @@ def run_incremental(
         scored_pairs=scored,
         candidate_pairs=cands,
         docs=ndocs,
-        unique_turns=merged_unique,
-        membership=merged_membership,
         metrics=new_transcripts.sparkSession.createDataFrame(
             [], "metric string, value double"
         ),
+        registry=lambda: (merged_unique, merged_membership),
         lint=lint_df,
         persisted=persisted,
     )

@@ -154,6 +154,42 @@ def test_old_rows_pair_only_with_new_rows(spark):
     assert keys["k_pushed"][0] <= max_block and df_of["k_salted"] > salt_threshold
 
 
+def test_cross_pairs_per_key_salt_rule(spark):
+    """The salted join decides hot vs cold per key, off greatest(dfa,
+    dfb), so both sides of a key take the same tier: a key hot on one
+    side only, keys at salt_threshold and salt_threshold + 1, and a key
+    stop-banded on one side all give the brute-force pair set. Ids repeat
+    across keys, so a pair two keys share must come out once."""
+    salt_threshold, max_block = 4, 8
+    # key -> (rows on side A, rows on side B)
+    keys = {
+        "k_hot_a": (salt_threshold + 2, 2),  # dfa > salt_threshold >= dfb
+        "k_hot_b": (1, salt_threshold + 1),  # dfb > salt_threshold >= dfa
+        "k_at": (salt_threshold, salt_threshold),
+        "k_at1": (salt_threshold + 1, salt_threshold + 1),
+        "k_stop_a": (max_block + 1, 1),
+        "k_a_only": (3, 0),
+    }
+    rows_a, rows_b = [], []
+    for j, (k, (na, nb)) in enumerate(keys.items()):
+        rows_a += [(f"a{(i * 3 + j) % 11:02d}", k) for i in range(na)]
+        rows_b += [(f"b{(i * 5 + j) % 13:02d}", k) for i in range(nb)]
+    df_a = spark.createDataFrame(rows_a, "id string, band_key string")
+    df_b = spark.createDataFrame(rows_b, "id string, band_key string")
+    assert len(set(rows_a)) == len(rows_a) and len(set(rows_b)) == len(rows_b)
+    expect = {
+        (a, b)
+        for a, ka in rows_a
+        for b, kb in rows_b
+        if ka == kb and max(keys[ka]) <= max_block
+    }
+    got = blocking.cross_candidate_pairs(
+        df_a, df_b, max_block=max_block, salt_threshold=salt_threshold, salt_groups=3
+    ).collect()
+    assert len(got) == len({(r["id_a"], r["id_b"]) for r in got})
+    assert {(r["id_a"], r["id_b"]) for r in got} == expect
+
+
 def test_bloom_preprune_keeps_only_pairable(spark):
     rows = [("a", "k1"), ("b", "k1"), ("c", "k2"), ("d", "k3"), ("e", "k3"), ("f", "k3")]
     df = spark.createDataFrame(rows, "id string, band_key string")

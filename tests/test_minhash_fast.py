@@ -97,3 +97,115 @@ def test_band_keys_divisibility_guard():
         band_keys("sig", bands=256, num_perm=128)
     with pytest.raises(ValueError):
         band_keys("sig", bands=48, num_perm=128)
+
+
+#: Blocking keys of two fixed conversations, taken before the band-key and
+#: shingle expressions became SQL strings. Committed ``doc_blocks`` rows
+#: must keep matching the keys a later fold derives from the same text, so
+#: any rewrite of those expressions has to reproduce these exactly. ``sh``
+#: is (length, sha256 of the comma-joined shingle hashes). gold-b has
+#: fewer than k=3 tokens, so its one shingle is the whole doc.
+GOLDEN_KEYS = {
+    "gold-a": {
+        "exact_fp": "8c37b5e1dcd70235d95603c8c908fd5e",
+        "bands": [
+            "b0:2730452368278936618",
+            "b1:236226716082562158",
+            "b2:610460719502374866",
+            "b3:7131993036392808609",
+            "b4:-7837759417366052394",
+            "b5:7446481685065818517",
+            "b6:8341880529369704815",
+            "b7:-5033387026353833511",
+            "b8:6933730964090390530",
+            "b9:6854387062957098694",
+            "b10:8924783143272623617",
+            "b11:-4968535822532310397",
+            "b12:-2121369776724531498",
+            "b13:4832286083231885677",
+            "b14:-1542122400088249003",
+            "b15:3121449638214438400",
+            "b16:-5806998983988415992",
+            "b17:-348710228971918285",
+            "b18:7196975345388739841",
+            "b19:-8326036526267328822",
+            "b20:2021033046359361602",
+            "b21:2507333217255649049",
+            "b22:6823316685624715145",
+            "b23:782362236180768738",
+            "b24:-8739789788911837075",
+            "b25:8432382410373567471",
+            "b26:2828260057528506707",
+            "b27:-8813758870650470996",
+            "b28:4239940632266228343",
+            "b29:-1624777038825623757",
+            "b30:1728903400052621602",
+            "b31:7805273139448493726",
+        ],
+        "sh": (23, "964bd16aa29a95ec2e98a12f417becf41ab067a78aa9d235e7b7e99f5f95e89d"),
+    },
+    "gold-b": {
+        "exact_fp": "fd33e2e8ad3cb1bdd3ea8f5633fcf5c7",
+        "bands": [
+            "b0:-6754597598629556791",
+            "b1:4704163192911151510",
+            "b2:-347199053428011912",
+            "b3:-8183889169980583532",
+            "b4:8404648289009649497",
+            "b5:-6806233137788769402",
+            "b6:139673895956629781",
+            "b7:-7807142531079985112",
+            "b8:-3186920088238407126",
+            "b9:-4570826187011033291",
+            "b10:-1299079618294702304",
+            "b11:2733909053343841868",
+            "b12:3475701624763221260",
+            "b13:-6299734584891683312",
+            "b14:-1770056521416664610",
+            "b15:4659114019473241325",
+            "b16:-894625327271722047",
+            "b17:-4171167047986890239",
+            "b18:-9065163521074380533",
+            "b19:8473408583939867515",
+            "b20:-3507346434478402187",
+            "b21:6591328923899077170",
+            "b22:-4741978793938395939",
+            "b23:9013571430924606975",
+            "b24:1092067245402564793",
+            "b25:5578750592973901291",
+            "b26:-4003796916257156890",
+            "b27:-216476626197328067",
+            "b28:-2879790591275342394",
+            "b29:-8506856888438623948",
+            "b30:-5195716146548156772",
+            "b31:7742163522041842877",
+        ],
+        "sh": (1, "7f7e6a190fa9d86dfef3cbd5bdbe6da56dc7bdf4f9db8c63628e2b5604b9c7f0"),
+    },
+}
+
+
+def test_golden_band_keys(spark):
+    import datetime
+    import hashlib
+
+    from dedupe_spark import pipeline, schemas
+
+    ts = datetime.datetime(2024, 1, 1)
+    rows = [
+        ("gold-a", 0, "user", "How do I reset my router's admin password?", None, ts),
+        ("gold-a", 1, "assistant",
+         "Hold the reset button for 10 seconds, then log in with admin/admin.", None, ts),
+        ("gold-a", 2, "user", "Thanks, that worked!", None, ts),
+        ("gold-b", 0, "user", "Hi there", None, ts),
+    ]
+    tr = spark.createDataFrame(rows, schemas.TRANSCRIPTS)
+    got = {
+        r["conv_id"]: {
+            "exact_fp": r["exact_fp"],
+            "bands": list(r["bands"]),
+            "sh": (len(r["sh"]), hashlib.sha256(",".join(map(str, r["sh"])).encode()).hexdigest()),
+        }
+        for r in pipeline._docs_with_bands(tr, pipeline.PipelineConfig()).collect()
+    }
+    assert got == GOLDEN_KEYS

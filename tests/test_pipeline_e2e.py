@@ -125,16 +125,25 @@ def test_pairwise_f1_with_cluster_repair(spark, result):
 
 
 #: Spark jobs one uncommitted ``pipeline.run`` of ``fixtures.transcripts(120)``
-#: takes in the test session, measured after blocking moved to one df
-#: pass and connected components to the union-find finish. A run of
-#: this size pays for its job count, not its rows.
-RUN_JOBS = 29
+#: takes in the test session, measured after blocking became one salted
+#: join and the turn registry is built only when read (27-28 before). A
+#: run of this size pays for its job count, not its rows.
+RUN_JOBS = 22
 
 #: Tasks the same run completes, measured after the docs stage became
-#: one branch and AQE was allowed to coalesce the stages that build
-#: cached frames (279-295 before). At this size each task wave costs
-#: more than the rows it processes.
-RUN_TASKS = 42
+#: one branch, AQE was allowed to coalesce the stages that build cached
+#: frames (279-295 before) and blocking became one salted join (42-43
+#: before). At this size each task wave costs more than the rows it
+#: processes.
+RUN_TASKS = 37
+
+#: Commands the driver sends the JVM while the same run builds its plan,
+#: up to the ``connected_components`` call (memory deletes, which follow
+#: Python's garbage collector, not counted). Measured after band keys and
+#: the shingle fold became one SQL expression each, blocking one salted
+#: join and the registry lazy (4,942 before). Each command is a socket
+#: round trip, paid before the first Spark job starts.
+RUN_PLAN_ROUND_TRIPS = 2044
 
 
 def _run_job_ids(spark, transcripts, group: str) -> list[int]:
@@ -167,3 +176,33 @@ def test_run_task_count_guard(spark, transcripts_small):
         st.numCompletedTasks for st in map(tracker.getStageInfo, stages) if st is not None
     )
     assert tasks <= RUN_TASKS + 18, f"pipeline.run completed {tasks} Spark tasks"
+
+
+def test_run_plan_round_trip_guard(spark, transcripts_small, monkeypatch):
+    from py4j.clientserver import ClientServerConnection
+
+    from dedupe_spark.operators import clustering
+
+    transcripts_small.count()
+    box = {"sent": 0, "at_cc": None}
+    send = ClientServerConnection.send_command
+    connected_components = clustering.connected_components
+
+    def counting_send(self, command):
+        if not command.startswith("m\nd\n"):  # memory delete
+            box["sent"] += 1
+        return send(self, command)
+
+    def at_connected_components(*args, **kwargs):
+        box["at_cc"] = box["sent"]
+        return connected_components(*args, **kwargs)
+
+    monkeypatch.setattr(clustering, "connected_components", at_connected_components)
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    res = pipeline.run(transcripts_small)
+    monkeypatch.undo()
+    res.release()
+    assert box["at_cc"] is not None
+    assert box["at_cc"] <= RUN_PLAN_ROUND_TRIPS * 1.1, (
+        f"pipeline.run sent {box['at_cc']} commands before connected_components"
+    )
