@@ -70,12 +70,10 @@ class SnapshotCatalog:
         os.makedirs(tdir, exist_ok=True)
         sid = self.current_snapshot_id(table) + 1
         data_dir = os.path.join(tdir, f"snap-{sid:06d}")
-        writer = df.write
+        writer = df.write.mode("overwrite")
         if partition_by:
-            # all rows of a partition value in one task: one file per
-            # partition directory, not one per (task, value)
-            writer = df.repartition(*partition_by).write.partitionBy(*partition_by)
-        writer.mode("overwrite").parquet(data_dir)
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(data_dir)
 
         # each data dir's schema, so a dir with no parquet file (an empty
         # partitioned append writes none) stays readable; None = infer

@@ -210,11 +210,10 @@ def repeated_blocks(blocks: DataFrame, deps: list | None = None) -> DataFrame:
     Other columns (a fold's ``old`` flag) pass through.
 
     One ``count(*) over (partition by band_key)`` — a single shuffle on
-    the key, with no separate frequency aggregate to join back. The
-    window's exchange also partitions the rows for the self-join that
-    reads them. ``deps``: optional list that receives the result,
-    persisted, so both sides of :func:`candidate_pairs`' join and the
-    caller's metrics read one computed copy."""
+    the key, with no separate frequency aggregate to join back.
+    ``deps``: optional list that receives the result, persisted, so both
+    sides of :func:`candidate_pairs`' join and the caller's metrics read
+    one computed copy."""
     counted = blocks.select(
         "*", F.count("*").over(Window.partitionBy("band_key")).alias("df")
     ).where(F.col("df") >= 2)

