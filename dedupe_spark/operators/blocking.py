@@ -357,13 +357,18 @@ def exact_key_pairs(df: DataFrame, id_col: str, key_col: str) -> DataFrame:
     here: the candidate-join stop-band exists to stop quadratic skew,
     but a 50k-copy boilerplate group is exactly the highest-redundancy
     case exact dedup must catch, and capping it would silently drop
-    every edge for the biggest duplicate groups."""
-    keyed = df.select(F.col(key_col).alias("k"), F.col(id_col).alias("id"))
-    mins = keyed.groupBy("k").agg(F.min("id").alias("id_a"), F.count("*").alias("n"))
+    every edge for the biggest duplicate groups.
+
+    One window (one exchange) gives every row its group's minimum; a
+    row of a one-row group equals its own minimum and drops out, so no
+    group count is needed. NULL keys never pair, as in an equi-join."""
     return (
-        keyed.join(mins.where(F.col("n") >= 2), "k")
-        .where(F.col("id") != F.col("id_a"))
-        .select("id_a", F.col("id").alias("id_b"))
+        df.where(F.col(key_col).isNotNull())
+        .select(
+            F.min(id_col).over(Window.partitionBy(key_col)).alias("id_a"),
+            F.col(id_col).alias("id_b"),
+        )
+        .where(F.col("id_b") != F.col("id_a"))
     )
 
 

@@ -13,11 +13,13 @@ O(log n) rounds and keep every step a plain DataFrame groupBy/join:
   small-star: each node points its *smaller-or-equal* neighbors at the
               minimum of its neighborhood
 
-Small graphs skip the loop: once the edge count the loop's checksum
-already brings to the driver is at most ``LOCAL_FINISH_MAX_EDGES``, the
-edges are collected (Arrow) and finished with union-find in Python —
-Kiveris et al.'s own advice for the tail of the computation. It
-replaces every star round, a few Spark jobs each, with one collect.
+Small graphs skip the loop: the first action collects at most
+``LOCAL_FINISH_MAX_EDGES + 1`` edges (one bounded Arrow collect), and a
+graph that fits is finished with union-find in Python — Kiveris et
+al.'s own advice for the tail of the computation. It replaces every
+star round, a few Spark jobs each, with that one collect; a star round
+that brings the checksum's edge count under the bound finishes the
+same way.
 
 Each star iteration is checkpointed — ``localCheckpoint`` to truncate lineage
 (else the DAG doubles every round), and optionally parquet snapshots per
@@ -112,6 +114,7 @@ def connected_components(
     checkpoint_dir: str | None = None,
     max_iterations: int = MAX_ITERATIONS,
     resume: bool = False,
+    deps: list | None = None,
 ) -> DataFrame:
     """(node, cluster_id) for every node that appears in ``edges``.
 
@@ -125,6 +128,9 @@ def connected_components(
     ``checkpoint_dir``, every star iteration writes its edge set and a
     metrics row (the local finish writes none); ``resume=True``
     restarts from the newest snapshot.
+
+    ``deps``: optional list that receives a handle on every edge
+    checkpoint, whose ``unpersist()`` drops it (``PipelineResult.release``).
     """
     spark = edges.sparkSession
     e = _canonical(edges)
@@ -139,21 +145,31 @@ def connected_components(
                 start_iter, e = it, spark.read.parquet(path)
                 break
 
-    # lazy checkpoint + checksum: the checksum action materializes the
-    # checkpoint in the SAME job, halving driver round-trips per iteration
+    def checkpoint(df: DataFrame) -> DataFrame:
+        df = df.localCheckpoint(eager=False)
+        if deps is not None:
+            deps.append(_Checkpoint(df))
+        return df
+
+    # lazy checkpoint + one bounded collect: the collect materializes the
+    # checkpoint in the SAME job and decides the small-graph path, so a
+    # graph over the bound enters the loop without recomputing its edges
     # (driver latency is the serial fraction that caps scaling efficiency)
-    e = e.localCheckpoint(eager=False)
+    e = checkpoint(e)
+    head = e.limit(LOCAL_FINISH_MAX_EDGES + 1).toArrow()
+    if head.num_rows <= LOCAL_FINISH_MAX_EDGES:
+        return _local_finish(e, head)
     prev = _checksum(e)
-    if prev[0] <= LOCAL_FINISH_MAX_EDGES:
-        return _local_finish(e)
-    converged = prev[0] == 0
+    converged = False
     # a resume that lands exactly on max_iterations still gets one
     # verification round — convergence is only observable as a no-change
     # iteration
     for it in range(start_iter, max(max_iterations, start_iter + 1)):
         if converged:
             break
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # lazy checkpoint + checksum: the checksum action materializes
+        # the checkpoint in the SAME job
+        e = checkpoint(_small_star(_large_star(e)))
         cur = _checksum(e)
         if cur[0] > prev[0]:
             raise ConvergenceError(
@@ -165,7 +181,7 @@ def connected_components(
         if cur == prev or cur[0] == 0:
             converged = True
         elif cur[0] <= LOCAL_FINISH_MAX_EDGES:
-            return _local_finish(e)
+            return _local_finish(e, e.toArrow())
         prev = cur
     if not converged:
         raise ConvergenceError(
@@ -180,14 +196,26 @@ def connected_components(
     return assign.union(roots).groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
 
 
-def _local_finish(edges: DataFrame) -> DataFrame:
-    """(node, cluster_id) of ``edges`` by union-find on the driver.
+class _Checkpoint:
+    """Handle on a ``localCheckpoint``'s RDD: ``DataFrame.unpersist``
+    does not reach it (it is cached by the RDD, not the cache manager),
+    so it would stay in executor memory until the JVM collects it."""
+
+    def __init__(self, df: DataFrame):
+        self._rdd = df._jdf.logicalPlan().rdd()
+
+    def unpersist(self) -> None:
+        self._rdd.unpersist(False)
+
+
+def _local_finish(edges: DataFrame, table: pa.Table) -> DataFrame:
+    """(node, cluster_id) by union-find on the driver over ``table``,
+    every (src, dst) row of ``edges`` collected.
 
     Linking the larger root under the smaller keeps every root its
     component's minimum node, the star loop's representative. Python's
     ``<`` orders ints and strings as Spark does (UTF-8 byte order is
     code-point order), so both paths pick the same minimum."""
-    table = edges.select("src", "dst").toArrow()
     parent: dict = {}
 
     def find(x):
@@ -322,6 +350,7 @@ def incremental_components(
     new_edges: DataFrame,
     checkpoint_dir: str | None = None,
     max_iterations: int = MAX_ITERATIONS,
+    deps: list | None = None,
 ) -> DataFrame:
     """Fold ``new_edges`` into an existing (node, cluster_id) assignment
     WITHOUT recomputing components over the original edge set.
@@ -359,6 +388,7 @@ def incremental_components(
         star.union(new_edges.select("src", "dst")),
         checkpoint_dir=checkpoint_dir,
         max_iterations=max_iterations,
+        deps=deps,
     )
     untouched = assignments.join(merged.select("node"), "node", "left_anti")
     return merged.unionByName(untouched.select("node", "cluster_id"))

@@ -5,8 +5,9 @@ Reference analog: candidate verification is length-compare then memcmp
 first, expensive second. Generalized to similarity per the north star:
 
   1. length-band filter (free, codegen'd)
-  2. token-shingle Jaccard: xxhash64 shingle arrays + ``array_intersect``
-     / ``array_union`` — whole-stage-codegen'd set ops, O(n+m) per pair
+  2. token-shingle Jaccard: one ``array_intersect`` of the distinct
+     xxhash64 shingle arrays per pair (codegen'd, O(n+m)); the union
+     size follows from the overlap, |A∪B| = |A| + |B| - |A∩B|
   3. bounded Levenshtein ratio (``F.levenshtein`` with a distance
      threshold) only on the ambiguous Jaccard band
 
@@ -37,11 +38,12 @@ MIN_LEN_RATIO = 0.40  # length-band prefilter (blocks_cmp length check)
 LEV_PREFIX_CAP = 2000  # bound the O(n*m) DP: compare first N chars only
 
 
-def jaccard_expr(sh_a: Column, sh_b: Column) -> Column:
-    """|A∩B| / |A∪B| over hashed shingle arrays (codegen'd set ops)."""
-    inter = F.size(F.array_intersect(sh_a, sh_b)).cast("double")
-    union = F.size(F.array_union(sh_a, sh_b)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+def jaccard_expr(inter: Column, n_a: Column, n_b: Column) -> Column:
+    """|A∩B| / |A∪B| of two DISTINCT-element arrays of sizes ``n_a`` and
+    ``n_b`` from their overlap ``inter`` alone: |A∪B| = n_a + n_b - inter.
+    0.0 when they share nothing, are both empty, or either is NULL."""
+    union = (n_a + n_b - inter).cast("double")
+    return F.when(inter > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
 
 
 def lev_ratio_expr(
@@ -357,7 +359,19 @@ def score_pairs(
     banded = joined.where(
         F.least("len_a", "len_b") >= (F.greatest("len_a", "len_b") * F.lit(min_len_ratio))
     )
-    jacc = banded.withColumn("jaccard", jaccard_expr(F.col("sh_a"), F.col("sh_b")))
+    # |A∩B| is bound by a one-row generator, not a projection: Catalyst
+    # inlines a projected column into every reference, and pushes a
+    # caller's ``where("is_dup")`` into the join condition, where no
+    # subexpression elimination applies, so the intersection would run
+    # once per reference. No filter is pushed through a Generate, so it
+    # runs once per pair.
+    jacc = (
+        banded.select(
+            "*", F.explode(F.array(F.size(F.array_intersect("sh_a", "sh_b")))).alias("_inter")
+        )
+        .withColumn("jaccard", jaccard_expr(F.col("_inter"), F.size("sh_a"), F.size("sh_b")))
+        .drop("_inter")
+    )
     in_band = (F.col("jaccard") >= F.lit(JACCARD_GATE)) & (
         F.col("jaccard") < F.lit(JACCARD_ACCEPT)
     )

@@ -93,8 +93,8 @@ class PipelineConfig:
     cluster_repair_strong: float = 0.9
     checkpoint_dir: str | None = None
     resume: bool = False
-    # metrics cost ~25 extra Spark jobs (each count re-executes its
-    # frame): 48 against 23 for run() on fixtures.build_plan(300), 4
+    # metrics cost ~23 extra Spark jobs (each count re-executes its
+    # frame): 41 against 18 for run() on fixtures.build_plan(300), 4
     # cores; opt in when publishing a run
     compute_metrics: bool = False
     # A↔B linkage assignment mode (pipeline.link only):
@@ -143,7 +143,8 @@ class PipelineResult:
 
     def release(self) -> None:
         """Unpersist every intermediate this run cached (the registry's
-        too, once built). Call after the final action on the result
+        too, once built, and connected components' edge checkpoints).
+        Call after the final action on the result
         DataFrames — repeated pipeline runs in one session (bench,
         notebooks) otherwise accumulate cached tables in executor
         memory."""
@@ -334,7 +335,7 @@ def run(
 
             checkpoint_dir = os.path.join(warehouse, "_cc_checkpoints")
     cc = clustering.connected_components(
-        edges, checkpoint_dir=checkpoint_dir, resume=cfg.resume
+        edges, checkpoint_dir=checkpoint_dir, resume=cfg.resume, deps=persisted
     )
     clusters = clustering.clusters_with_singletons(docs.select("conv_id"), cc)
 
@@ -968,7 +969,7 @@ def run_incremental(
         F.col("conv_id").alias("node"), "cluster_id"
     ).persist()
     persisted.append(prev)
-    merged_cc = clustering.incremental_components(prev, edges)
+    merged_cc = clustering.incremental_components(prev, edges, deps=persisted)
     all_ids = prev.select(F.col("node").alias("conv_id")).union(
         ndocs.select("conv_id")
     ).distinct()

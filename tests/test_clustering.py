@@ -359,6 +359,49 @@ def test_small_graph_skips_star_loop(spark, monkeypatch):
     assert set(got.values()) == {"n00"} and len(got) == 10
 
 
+def test_bounded_collect_decides_path(spark, monkeypatch):
+    """A graph of exactly ``LOCAL_FINISH_MAX_EDGES`` (canonical) edges
+    finishes on the driver from the one bounded collect, with no
+    checksum job; one edge more takes the star loop."""
+    calls = []
+    checksum = clustering._checksum
+
+    def counted(e):
+        calls.append(1)
+        return checksum(e)
+
+    monkeypatch.setattr(clustering, "_checksum", counted)
+    monkeypatch.setattr(clustering, "LOCAL_FINISH_MAX_EDGES", 5)
+    # 5 canonical edges; the reversed duplicate and the self-loop vanish
+    pairs = [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9), (2, 1), (4, 4)]
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    want = {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 7}
+    assert _assign(connected_components(e)) == want
+    assert calls == []
+    e6 = spark.createDataFrame(pairs + [(9, 10)], "src long, dst long")
+    assert _assign(connected_components(e6)) == {**want, 10: 7}
+    assert calls
+
+
+@pytest.mark.usefixtures("star_loop")
+def test_star_loop_checkpoints_released(spark):
+    """Every edge checkpoint of the loop lands in ``deps``, and
+    unpersisting them leaves no RDD of the run in storage."""
+    sc = spark.sparkContext
+
+    def cached():
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    deps: list = []
+    e = _edges(spark, [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(9)])
+    assert set(_assign(connected_components(e, deps=deps)).values()) == {"n00"}
+    assert len(deps) >= 2 and cached() - before
+    for d in deps:
+        d.unpersist()
+    assert cached() - before == set()
+
+
 def test_local_finish_keeps_id_type(spark):
     e = spark.createDataFrame([(3, 1), (2, 3), (9, 8)], "src long, dst long")
     cc = connected_components(e)

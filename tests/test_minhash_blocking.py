@@ -217,6 +217,32 @@ def test_exact_key_pairs_no_group_size_cap(spark):
     assert edges.agg(F.min("id_a"), F.max("id_b")).collect()[0] == (0, n - 1)
 
 
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_exact_key_pairs_matches_group_join(spark, id_type):
+    """Brute force against the group-min-and-join-back semantics: every
+    row of a non-NULL key whose id differs from its key's minimum id
+    yields (min, id), once per row. NULL keys never pair; a singleton
+    key, or a key whose rows all repeat one id, yields nothing."""
+    rng = np.random.default_rng(7)
+    ids = [int(i) for i in rng.integers(0, 40, 200)]
+    keys = [None if k == 0 else f"k{k}" for k in rng.integers(0, 12, 200)]
+    rows = list(zip(ids, keys)) + [
+        (100, "solo"), (101, "twin"), (101, "twin"), (102, None), (103, None),
+    ]
+    conv = str if id_type == "string" else int
+    rows = [(conv(i), k) for i, k in rows]
+    df = spark.createDataFrame(rows, f"id {id_type}, k string")
+
+    groups: dict = {}
+    for i, k in rows:
+        if k is not None:
+            groups.setdefault(k, []).append(i)
+    want = sorted((min(g), i) for g in groups.values() for i in g if i != min(g))
+    got = sorted(tuple(r) for r in blocking.exact_key_pairs(df, "id", "k").collect())
+    assert got == want
+    assert not {x for p in got for x in p} & {conv(100), conv(101), conv(102), conv(103)}
+
+
 def test_blocking_quality_ignores_null_keys(spark):
     """NULL keys never join, so they must not contribute candidates."""
     df = spark.createDataFrame(

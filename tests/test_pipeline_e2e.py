@@ -125,17 +125,20 @@ def test_pairwise_f1_with_cluster_repair(spark, result):
 
 
 #: Spark jobs one uncommitted ``pipeline.run`` of ``fixtures.transcripts(120)``
-#: takes in the test session, measured after blocking became one salted
-#: join and the turn registry is built only when read (27-28 before). A
-#: run of this size pays for its job count, not its rows.
-RUN_JOBS = 22
+#: takes in the test session, measured after the exact pairs became one
+#: window and one bounded collect decided the small-graph path of
+#: connected components (22 before; 27-28 before blocking became one
+#: salted join and the registry lazy). A run of this size pays for its
+#: job count, not its rows.
+RUN_JOBS = 17
 
 #: Tasks the same run completes, measured after the docs stage became
 #: one branch, AQE was allowed to coalesce the stages that build cached
-#: frames (279-295 before) and blocking became one salted join (42-43
-#: before). At this size each task wave costs more than the rows it
-#: processes.
-RUN_TASKS = 37
+#: frames (279-295 before), blocking became one salted join (42-43
+#: before), and the exact pairs one window and connected components one
+#: bounded collect (37 before). At this size each task wave costs more
+#: than the rows it processes.
+RUN_TASKS = 32
 
 #: Commands the driver sends the JVM while the same run builds its plan,
 #: up to the ``connected_components`` call (memory deletes, which follow
@@ -206,3 +209,32 @@ def test_run_plan_round_trip_guard(spark, transcripts_small, monkeypatch):
     assert box["at_cc"] <= RUN_PLAN_ROUND_TRIPS * 1.1, (
         f"pipeline.run sent {box['at_cc']} commands before connected_components"
     )
+
+
+def test_run_edges_plan_intersects_once(spark, transcripts_small):
+    """The scorer's Jaccard takes one ``array_intersect`` per pair and
+    no ``array_union`` in the optimized plan of the edges, whose
+    ``is_dup`` filter Catalyst would otherwise push into the scoring
+    join's condition."""
+    res = pipeline.run(transcripts_small)
+    plan = res.edges._jdf.queryExecution().optimizedPlan().toString()
+    res.release()
+    assert plan.count("array_intersect") == 1, plan
+    assert plan.count("array_union") == 0, plan
+
+
+def test_release_drops_every_cached_rdd(spark, transcripts_small):
+    """After ``release()`` no RDD the run cached stays in storage: the
+    persisted frames and connected components' edge checkpoint."""
+    transcripts_small.count()
+    sc = spark.sparkContext
+
+    def cached():
+        return {info.id() for info in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached()
+    res = pipeline.run(transcripts_small)
+    res.clusters.collect()
+    assert cached() - before, "the run cached nothing; the test checks nothing"
+    res.release()
+    assert cached() - before == set()

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dedupe_spark.operators.scoring import (
+    JACCARD_ACCEPT,
     jaro_winkler_batch,
     jaro_winkler_py,
     levenshtein_ratio_py,
@@ -112,6 +113,69 @@ def test_score_pairs_end_to_end(spark):
     assert got[("a", "c")][1]  # near duplicate accepted
     assert not got[("a", "d")][1]  # unrelated rejected
     assert ("a", "e") not in got  # length-band prefilter removed it
+
+
+def _set_jaccard(a, b):
+    if a is None or b is None or not (set(a) | set(b)):
+        return 0.0
+    return len(set(a) & set(b)) / len(set(a) | set(b))
+
+
+def test_jaccard_from_overlap_matches_set_oracle(spark):
+    """Precomputed distinct shingle arrays: jaccard from |A∩B| alone
+    equals |A∩B| / |A∪B| of Python sets, including empty arrays, a NULL
+    array (0.0) and a pair at exactly JACCARD_ACCEPT (accepted)."""
+    rng = np.random.default_rng(11)
+    sh = {f"r{i}": sorted({int(x) for x in rng.integers(0, 60, rng.integers(1, 40))})
+          for i in range(12)}
+    sh.update({"e1": [], "e2": [], "null": None, "acc_a": [1, 2, 3, 4], "acc_b": [1, 2, 5]})
+    docs = spark.createDataFrame(
+        [(k, "x", 1, v) for k, v in sh.items()],
+        "conv_id string, doc string, doc_len int, sh array<bigint>",
+    )
+    ids = sorted(sh)
+    pairs = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a string, id_b string"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): (r["jaccard"], r["is_dup"])
+        for r in score_pairs(pairs, docs, sh_col="sh").collect()
+    }
+    assert len(got) == len(ids) * (len(ids) - 1) // 2
+    for (a, b), (jac, _) in got.items():
+        assert jac == _set_jaccard(sh[a], sh[b]), (a, b)
+    assert got[("e1", "e2")][0] == 0.0
+    assert got[("e1", "null")][0] == 0.0 and got[("null", "r0")][0] == 0.0
+    assert got[("acc_a", "acc_b")] == (JACCARD_ACCEPT, True)
+
+
+def test_jaccard_recompute_path_matches_set_oracle(spark):
+    """Docs without a shingle column (the path folds take for committed
+    docs): repeated shingles within a doc count once, as in sets."""
+    from dedupe_spark.operators.minhash import shingle_hashes
+
+    texts = {
+        "a": "a b c a b c a b c d e f",
+        "b": "a b c d e f g h a b c",
+        "c": "x y z x y z",
+        "d": "a b",
+        "e": "",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "conv_id string, doc string").withColumn(
+        "doc_len", F.length("doc")
+    )
+    sh = {r["conv_id"]: r["sh"] for r in docs.select("conv_id", shingle_hashes("doc").alias("sh")).collect()}
+    pairs = spark.createDataFrame(
+        [(a, b) for a in texts for b in texts if a < b], "id_a string, id_b string"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in score_pairs(pairs, docs, min_len_ratio=0.0).collect()
+    }
+    assert len(got) == 10
+    for (a, b), jac in got.items():
+        assert jac == _set_jaccard(sh[a], sh[b]), (a, b)
+    assert 0.0 < got[("a", "b")] < 1.0
 
 
 def test_lev_only_computed_in_ambiguous_band(spark):
