@@ -1049,37 +1049,6 @@ def q60_cluster_size_histogram(spark, sf_dir):
     )
 
 
-def q61_blocking_quality(spark, sf_dir):
-    """Blocking-scheme pre-flight: reduction ratio + block-size stats for
-    a prefix blocking key (operators/blocking.py:blocking_quality). The
-    number you read BEFORE launching the candidate join at 100 TB —
-    the reference tunes the equivalent knob (chunk-size bucket bounds,
-    /root/reference/src/deduplication.cpp:985-1010) but never surfaces
-    the metric."""
-    from dedupe_spark.operators.blocking import blocking_quality
-    from dedupe_spark.operators.normalize import norm_text
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "bkey", F.substring(norm_text("text"), 1, 16)
-    )
-    return blocking_quality(d, "doc_id", "bkey")
-
-
-def q62_sorted_neighborhood_pairs(spark, sf_dir):
-    """Sorted-neighborhood blocking (Hernandez-Stolfo): global order by a
-    normalized key prefix, pair each record with its window-1 successors.
-    The global sort uses the distributed dense-id operator (range
-    exchange + parallel windows), not a single-reducer row_number; the
-    neighbor step is an equi-join on rank+k."""
-    from dedupe_spark.operators.blocking import sorted_neighborhood_pairs
-    from dedupe_spark.operators.normalize import norm_text
-
-    d = _t(spark, sf_dir, "documents").withColumn(
-        "bkey", F.substring(norm_text("text"), 1, 24)
-    )
-    return sorted_neighborhood_pairs(d, "doc_id", "bkey", window=3)
-
-
 _FS_PAIR_OFFSETS = (1, 13)  # +1 is near-dup-rich in the fixture, +13 mostly non-match
 
 
@@ -1419,86 +1388,6 @@ def q68_span_trimmed_docs(spark, sf_dir):
     )
 
 
-def q69_monge_elkan_pairs(spark, sf_dir):
-    """Monge-Elkan/JW scoring (operators/scoring.py:monge_elkan_on_pairs)
-    over a within-brand rank-neighborhood pair set: multi-word part names
-    compared token-by-token (mean-of-max Jaro-Winkler, both directions +
-    symmetric mean). Pair generation is an equi-join on (brand, rank+gap)
-    — linear in rows, never the per-brand cross product; scoring is one
-    Arrow batch per direction through the same vectorized JW kernel the
-    pipeline decider uses."""
-    from pyspark.sql import Window
-
-    from dedupe_spark.operators.scoring import monge_elkan_on_pairs
-
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("k"),
-        F.col("p_brand").alias("brand"),
-        F.col("p_name").alias("nm"),
-    )
-    r = p.withColumn(
-        "rnk", F.row_number().over(Window.partitionBy("brand").orderBy("k"))
-    )
-    a = (
-        r.select(
-            "brand",
-            F.col("k").alias("key_a"),
-            F.col("nm").alias("name_a"),
-            "rnk",
-            F.explode(F.array(F.lit(1), F.lit(2))).alias("gap"),
-        )
-        .withColumn("rnk_b", F.col("rnk") + F.col("gap"))
-        .drop("rnk", "gap")
-    )
-    b = r.select(
-        "brand",
-        F.col("k").alias("key_b"),
-        F.col("nm").alias("name_b"),
-        F.col("rnk").alias("rnk_b"),
-    )
-    pairs = a.join(b, ["brand", "rnk_b"])
-    return monge_elkan_on_pairs(pairs).select(
-        "key_a",
-        "key_b",
-        F.round("me_ab", 6).alias("me_ab"),
-        F.round("me_ba", 6).alias("me_ba"),
-        F.round("me_sym", 6).alias("me_sym"),
-    )
-
-
-def q70_meta_blocking(spark, sf_dir):
-    """Meta-blocking with CBS weights + weighted node pruning
-    (operators/blocking.py:meta_blocking_wnp) over shared-8-gram blocks:
-    purge out-of-band blocks, weight each co-occurring doc pair by how
-    many blocks it shares, keep edges that reach either endpoint's mean
-    weight. Block purging caps per-key fan-out BEFORE the pair join, so
-    the quadratic blow-up meta-blocking exists to kill never forms.
-
-    Keys are mod-p-selected 8-grams (Broder '97 shingle selection: keep
-    a gram iff its hash lands in a fixed 1/8 slice — here md5 hex prefix
-    '0'/'1') — the standard way to bound keys-per-entity BEFORE the
-    shuffle; co-occurring docs still share the same selected grams, so
-    block recall degrades gracefully while shuffle volume drops 8x."""
-    from dedupe_spark.operators.blocking import meta_blocking_wnp
-    from dedupe_spark.operators.dedup import gram_rows
-
-    release_query_caches()
-    d = _spread(spark, _t(spark, sf_dir, "documents"))
-    grams = (
-        gram_rows(d, "doc_id", "text", 8)
-        .withColumnRenamed("g", "key")
-        .where(F.substring(F.md5(F.col("key")), 1, 1).isin("0", "1"))
-    )
-    # persisted EAGERLY: the WNP graph reads the assignment table from
-    # four branches (block sizes, live join, both pair-join sides) that
-    # AQE materializes concurrently — a lazy persist would race its own
-    # fill and every branch would re-run the 8-gram string build
-    grams = grams.persist()
-    grams.count()
-    _QUERY_DEPS.append(grams)
-    return meta_blocking_wnp(grams, "id", "key", min_block=2, max_block=10)
-
-
 def q71_phonetic_blocking(spark, sf_dir):
     """Phonetic blocking: Soundex codes over the part-name vocabulary,
     emitting the sound-alike word pairs each code groups (the classic
@@ -1722,57 +1611,14 @@ def q79_uncertainty_sample(spark, sf_dir):
     return sel.select("id_a", "id_b", "match_prob", "uncertainty")
 
 
-def q80_deletion_neighborhood(spark, sf_dir):
-    """Edit-distance<=1 fuzzy key join via deletion neighborhoods
-    (operators/blocking.py:deletion_neighborhood_pairs; FastSS/SymSpell)
-    over customer names — every pair of c_name values within one edit,
-    found by an equi-join on single-deletion variants instead of an
-    all-pairs comparison, then verified with exact levenshtein."""
-    from dedupe_spark.operators.blocking import deletion_neighborhood_pairs
-
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    pairs = deletion_neighborhood_pairs(c, "c_custkey", "c_name", max_edits=1)
-    return pairs.select(
-        "id_a", "id_b", F.col("edit_distance").cast("long").alias("edit_distance")
-    )
-
-
-def q81_blocking_rule_coverage(spark, sf_dir):
-    """Cumulative pair coverage per blocking rule (operators/blocking.py:
-    blocking_rule_coverage; Splink's cumulative-comparisons pre-flight):
-    for an ordered rule list — exact normalized fingerprint, 16-char
-    normalized prefix, 16-char length band — how many candidate pairs
-    each rule generates and how many are NEW vs every earlier rule. The
-    deliberately weak length-band rule demonstrates the point of the
-    metric: high pair volume, little new coverage."""
-    from dedupe_spark.operators.blocking import blocking_rule_coverage
-    from dedupe_spark.operators.normalize import norm_text
-
-    d = _t(spark, sf_dir, "documents")
-    norm = norm_text("text")
-    rules = [
-        ("exact", d.select("doc_id", F.md5(norm).alias("k"))),
-        ("prefix16", d.select("doc_id", F.substring(norm, 1, 16).alias("k"))),
-        (
-            "len_band",
-            d.select(
-                "doc_id",
-                F.floor(F.col("n_chars") / 16).cast("string").alias("k"),
-            ),
-        ),
-    ]
-    return blocking_rule_coverage(rules)
-
-
 def q82_link_pipeline(spark, sf_dir):
     """Full production A↔B linkage pipeline (pipeline.link): documents
     chunked into deterministic 16-token transcript turns, split into a
     probe table (odd doc_id) and a registry table (even), then linked
-    end-to-end — per-side docs + xxhash64/Philox MinHash bands, Bloom
-    probe of the registry key set, salted cross-table candidate join
-    (blocking.cross_candidate_pairs), Jaccard-gated verification
-    scoring, and many-to-one assignment (best registry link per probe
-    record). The probe-stream-vs-build-registry flow of the reference
+    end-to-end — per-side docs + xxhash64/Philox MinHash bands, salted
+    cross-table candidate join (blocking.cross_candidate_pairs),
+    Jaccard-gated verification scoring, and many-to-one assignment (best
+    registry link per probe record). The probe-stream-vs-build-registry flow of the reference
     (src/deduplication.cpp:1393-1461) generalized to two tables. No SQL
     oracle: the production hash family is not ANSI-SQL-expressible (same
     status as q21_fast); the stage composition is oracle-verified by
@@ -1816,8 +1662,8 @@ def q83_linkage_waterfall(spark, sf_dir):
     blocking.cross_candidate_pairs' per-side stop band, verified with
     distinct 3-gram Jaccard >= 0.5, and many-to-one assignment (best
     link per probe record, score desc / partner-id tie-break). The SQL
-    oracle replicates every stage 1:1; salting and Bloom pruning change
-    no output rows by construction, so the oracle omits them."""
+    oracle replicates every stage 1:1; salting changes no output rows by
+    construction, so the oracle omits it."""
     from dedupe_spark.operators import blocking
     from dedupe_spark.operators.dedup import gram_rows, minhash_band_keys_sql
     from dedupe_spark.operators.normalize import norm_text
@@ -2006,15 +1852,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q58_source_profile": q58_source_profile,
         "q59_threshold_sweep": q59_threshold_sweep,
         "q60_cluster_size_histogram": q60_cluster_size_histogram,
-        "q61_blocking_quality": q61_blocking_quality,
-        "q62_sorted_neighborhood_pairs": q62_sorted_neighborhood_pairs,
         "q64_fs_em_linkage": q64_fs_em_linkage,
         "q65_golden_records": q65_golden_records,
         "q66_cluster_eval": q66_cluster_eval,
         "q67_duplicated_spans": q67_duplicated_spans,
         "q68_span_trimmed_docs": q68_span_trimmed_docs,
-        "q69_monge_elkan_pairs": q69_monge_elkan_pairs,
-        "q70_meta_blocking": q70_meta_blocking,
         "q71_phonetic_blocking": q71_phonetic_blocking,
         "q72_one_to_one_linkage": q72_one_to_one_linkage,
         "q73_tf_adjusted_linkage": q73_tf_adjusted_linkage,
@@ -2024,8 +1866,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q77_scorer_auc": q77_scorer_auc,
         "q78_unlinkables": q78_unlinkables,
         "q79_uncertainty_sample": q79_uncertainty_sample,
-        "q80_deletion_neighborhood": q80_deletion_neighborhood,
-        "q81_blocking_rule_coverage": q81_blocking_rule_coverage,
         "q82_link_pipeline": q82_link_pipeline,
         "q83_linkage_waterfall": q83_linkage_waterfall,
         "q28_cc_exact_clusters": q28_cc_exact_clusters,
@@ -2733,31 +2573,6 @@ SELECT cluster_size, count(*) AS n_clusters,
        CAST(sum(chars_saved) AS BIGINT) AS total_chars_saved
 FROM cl GROUP BY cluster_size
 """,
-        "q61_blocking_quality": f"""
-WITH keyed AS (
-    SELECT doc_id, substr({_NORM_SQL.format(c='text')}, 1, 16) AS k FROM documents
-),
-b AS (SELECT k, count(*) AS n FROM keyed GROUP BY k)
-SELECT CAST(sum(n) AS BIGINT) AS n_records,
-       CAST(count(*) AS BIGINT) AS n_blocks,
-       CAST(max(n) AS BIGINT) AS max_block,
-       CAST(sum(CASE WHEN n = 1 THEN 1 ELSE 0 END) AS BIGINT) AS singleton_blocks,
-       CAST(sum(n * (n - 1)) / 2 AS BIGINT) AS candidate_pairs,
-       round(1.0 - (sum(n * (n - 1)) / 2.0)
-                   / (sum(n) * (sum(n) - 1) / 2.0), 6) AS reduction_ratio
-FROM b
-""",
-        "q62_sorted_neighborhood_pairs": f"""
-WITH keyed AS (
-    SELECT doc_id, substr({_NORM_SQL.format(c='text')}, 1, 24) AS k FROM documents
-),
-r AS (
-    SELECT doc_id, row_number() OVER (ORDER BY k, doc_id) - 1 AS rank FROM keyed
-)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(b.rank - a.rank AS INT) AS rank_gap
-FROM r a JOIN r b ON b.rank - a.rank BETWEEN 1 AND 2
-""",
         "q64_fs_em_linkage": _fs_em_oracle(),
         "q65_golden_records": f"""
 WITH a AS (
@@ -2908,77 +2723,6 @@ SELECT d.id AS doc_id,
        CAST(len(d.toks) - coalesce(a.n_kept, 0) AS BIGINT) AS n_removed
 FROM d LEFT JOIN agg a USING (id)
 """,
-        "q69_monge_elkan_pairs": """
-WITH p AS (
-  SELECT p_partkey AS k, p_brand AS brand, p_name AS nm,
-         row_number() OVER (PARTITION BY p_brand ORDER BY p_partkey) AS rnk
-  FROM part
-),
-pairs AS (
-  SELECT a.k AS key_a, b.k AS key_b,
-         regexp_split_to_array(trim(a.nm), '\\s+') AS ta,
-         regexp_split_to_array(trim(b.nm), '\\s+') AS tb
-  FROM p a JOIN p b
-    ON a.brand = b.brand AND b.rnk BETWEEN a.rnk + 1 AND a.rnk + 2
-),
-tok AS (
-  SELECT key_a, key_b, 'ab' AS dir,
-         unnest(generate_series(1, len(ta))) AS i, ta, tb
-  FROM pairs
-  UNION ALL
-  SELECT key_a, key_b, 'ba',
-         unnest(generate_series(1, len(tb))), tb, ta
-  FROM pairs
-),
-crossed AS (
-  SELECT key_a, key_b, dir, i, ta[i] AS t, unnest(tb) AS u
-  FROM tok
-),
-mx AS (
-  SELECT key_a, key_b, dir, i, max(jaro_winkler_similarity(t, u)) AS m
-  FROM crossed GROUP BY key_a, key_b, dir, i
-),
-d AS (SELECT key_a, key_b, dir, avg(m) AS me FROM mx GROUP BY key_a, key_b, dir),
-w AS (
-  SELECT key_a, key_b,
-         max(CASE WHEN dir = 'ab' THEN me END) AS me_ab,
-         max(CASE WHEN dir = 'ba' THEN me END) AS me_ba
-  FROM d GROUP BY key_a, key_b
-)
-SELECT key_a, key_b, round(me_ab, 6) AS me_ab, round(me_ba, 6) AS me_ba,
-       round((me_ab + me_ba) / 2, 6) AS me_sym
-FROM w
-""",
-        "q70_meta_blocking": """
-WITH d AS (
-  SELECT doc_id AS id, regexp_split_to_array(trim(text), '\\s+') AS toks
-  FROM documents
-),
-d2 AS (SELECT id, toks, len(toks) AS n FROM d WHERE len(toks) >= 8),
-wins AS (SELECT id, unnest(generate_series(1, n - 7)) AS start, toks FROM d2),
-allkeys AS (
-  SELECT DISTINCT id, array_to_string(list_slice(toks, start, start + 7), ' ') AS key
-  FROM wins
-),
-keys AS (SELECT id, key FROM allkeys WHERE substr(md5(key), 1, 1) IN ('0', '1')),
-kept AS (
-  SELECT key FROM keys GROUP BY key
-  HAVING count(DISTINCT id) BETWEEN 2 AND 10
-),
-live AS (SELECT k.id, k.key FROM keys k JOIN kept USING (key)),
-w AS (
-  SELECT a.id AS id_a, b.id AS id_b, CAST(count(*) AS BIGINT) AS w
-  FROM live a JOIN live b ON a.key = b.key AND a.id < b.id
-  GROUP BY a.id, b.id
-),
-ends AS (SELECT id_a AS id, w FROM w UNION ALL SELECT id_b, w FROM w),
-avgs AS (SELECT id, avg(w) AS aw FROM ends GROUP BY id)
-SELECT w.id_a, w.id_b, w.w
-FROM w
-JOIN avgs x ON x.id = w.id_a
-JOIN avgs y ON y.id = w.id_b
-WHERE w.w >= x.aw OR w.w >= y.aw
-""",
         "q71_phonetic_blocking": f"""
 WITH wrds AS (
   SELECT DISTINCT unnest(regexp_split_to_array(trim(p_name), '\\s+')) AS w
@@ -3023,45 +2767,6 @@ FROM ranked WHERE ra = 1 AND rb = 1
         "q75_match_waterfall": _fs_waterfall_oracle(),
         "q78_unlinkables": _fs_unlinkables_oracle(),
         "q79_uncertainty_sample": _fs_uncertainty_oracle(),
-        "q81_blocking_rule_coverage": f"""
-WITH k1 AS (SELECT doc_id, md5({_NORM_SQL.format(c='text')}) AS k FROM documents),
-k2 AS (SELECT doc_id, substr({_NORM_SQL.format(c='text')}, 1, 16) AS k FROM documents),
-k3 AS (SELECT doc_id, CAST(CAST(floor(n_chars / 16) AS BIGINT) AS VARCHAR) AS k FROM documents),
-r1 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       FROM k1 a JOIN k1 b ON a.k = b.k AND a.doc_id < b.doc_id),
-r2 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       FROM k2 a JOIN k2 b ON a.k = b.k AND a.doc_id < b.doc_id),
-r3 AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-       FROM k3 a JOIN k3 b ON a.k = b.k AND a.doc_id < b.doc_id),
-n1 AS (SELECT count(*)::BIGINT AS c FROM r1),
-n2 AS (SELECT count(*)::BIGINT AS c FROM r2),
-n3 AS (SELECT count(*)::BIGINT AS c FROM r3),
-new2 AS (SELECT count(*)::BIGINT AS c FROM r2 WHERE NOT EXISTS
-         (SELECT 1 FROM r1 WHERE r1.id_a = r2.id_a AND r1.id_b = r2.id_b)),
-new3 AS (SELECT count(*)::BIGINT AS c FROM r3 WHERE NOT EXISTS
-         (SELECT 1 FROM r1 WHERE r1.id_a = r3.id_a AND r1.id_b = r3.id_b)
-         AND NOT EXISTS
-         (SELECT 1 FROM r2 WHERE r2.id_a = r3.id_a AND r2.id_b = r3.id_b))
-SELECT 0 AS rule_idx, 'exact' AS rule, n1.c AS n_pairs, n1.c AS n_new_pairs, n1.c AS cum_pairs FROM n1
-UNION ALL
-SELECT 1, 'prefix16', n2.c, new2.c, n1.c + new2.c FROM n1, n2, new2
-UNION ALL
-SELECT 2, 'len_band', n3.c, new3.c, n1.c + new2.c + new3.c FROM n1, n2, new2, n3, new3
-""",
-        "q80_deletion_neighborhood": """
-WITH v AS (
-  SELECT c_custkey AS id, c_name AS w,
-         unnest(list_distinct(list_prepend(c_name,
-           list_transform(range(1, length(c_name) + 1),
-             i -> substr(c_name, 1, i - 1) || substr(c_name, i + 1, length(c_name)))))) AS var
-  FROM customer
-),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b, a.w AS w_a, b.w AS w_b
-  FROM v a JOIN v b ON a.var = b.var AND a.id < b.id
-)
-SELECT id_a, id_b, levenshtein(w_a, w_b)::BIGINT AS edit_distance
-FROM cand WHERE levenshtein(w_a, w_b) <= 1""",
         "q77_scorer_auc": f"""
 WITH p0 AS (
 {" UNION ALL ".join(f"SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + {off}" for off in _AUC_PAIR_OFFSETS)}

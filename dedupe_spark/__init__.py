@@ -5,8 +5,10 @@ see /root/reference and SURVEY.md) as idiomatic Spark DataFrame stages:
 
     blocking keys (MinHash/LSH over normalized-text shingles, role-aware
     chunk_aac policy dispatch)
-        -> salted skew-aware candidate self-join with an explicit map-side
-           Bloom pre-prune (functions/bloom.py)
+        -> salted skew-aware candidate self-join, singleton keys pruned
+           off one exact frequency pass (the cross-table join of linkage
+           drops keys one side lacks the same way); a Bloom filter
+           (functions/bloom.py) fronts only the incremental registry probe
         -> JVM-expression pair scoring (shingle-hash token-Jaccard set ops;
            bounded Levenshtein on the ambiguous band only;
            cheap-predicate-first, mirroring blocks_cmp)

@@ -3,9 +3,8 @@
 The reference fronts every disk index probe with a Bloom filter whose
 negative lookups short-circuit the expensive path
 (/root/reference/src/HashDB.cpp:372, 429-431), sized by the optimal
-(m, k) solver (/root/reference/src/BloomFilter.cpp:36-83) and supporting
-set algebra over equal-shaped filters (:161-198) plus a serialize/
-deserialize round trip (:439-487). This module is the same operator,
+(m, k) solver (/root/reference/src/BloomFilter.cpp:36-83) with a
+serialize/deserialize round trip (:439-487). This module is the same operator,
 Spark-first:
 
   * **build** is a distributed aggregate: every key contributes its k
@@ -40,7 +39,7 @@ build/probe stay single-pass (the shard's bit width and word offset are
 literal-array lookups inside the same JVM expression family). The
 driver object is the same total size, but each *build aggregate* and
 each future *partial rebuild* is bounded per shard, and shards can be
-built/persisted/unioned independently. The hard cap is
+built/persisted independently. The hard cap is
 ``max_driver_bytes``: when the estimated bitmap exceeds it the build
 raises ``BloomBudgetError`` — callers (blocking.bloom_preprune
 ``mode="auto"``, lifecycle.register_turns_incremental) fall back to the
@@ -202,44 +201,6 @@ class Bloom:
             self.n_items + add.n_items, self.shard_bits, self.bit_offsets,
         )
 
-    # -- set algebra (reference BloomFilter.cpp:161-198) ---------------
-    def _check_shape(self, other: "Bloom") -> None:
-        if (
-            (self.num_bits, self.num_hash) != (other.num_bits, other.num_hash)
-            or self.shard_bits != other.shard_bits
-        ):
-            raise ValueError("bloom set algebra requires equal-shaped filters")
-
-    def union(self, other: "Bloom") -> "Bloom":
-        self._check_shape(other)
-        return Bloom(self.num_bits, self.num_hash, self.words | other.words,
-                     self.n_items + other.n_items, self.shard_bits, self.bit_offsets)
-
-    def intersect(self, other: "Bloom") -> "Bloom":
-        """Superset of the true intersection (standard BF semantics)."""
-        self._check_shape(other)
-        return Bloom(self.num_bits, self.num_hash, self.words & other.words,
-                     min(self.n_items, other.n_items), self.shard_bits, self.bit_offsets)
-
-    def xor(self, other: "Bloom") -> "Bloom":
-        """Bitwise symmetric difference (reference ``^=``,
-        BloomFilter.cpp:190-198). Like the reference, this is *bitmap*
-        algebra, not set semantics — a membership probe against the
-        result is only meaningful for keys inserted into exactly one
-        operand. n_items is advisory (kept as the operand max)."""
-        self._check_shape(other)
-        return Bloom(self.num_bits, self.num_hash, self.words ^ other.words,
-                     max(self.n_items, other.n_items), self.shard_bits, self.bit_offsets)
-
-    def diff(self, other: "Bloom") -> "Bloom":
-        """Bitwise a AND NOT b — clears every bit set in ``other``
-        (superset of removals; false-negative-free only for keys whose
-        bits don't collide with surviving members, same caveat as the
-        reference's destructive updates)."""
-        self._check_shape(other)
-        return Bloom(self.num_bits, self.num_hash, self.words & ~other.words,
-                     self.n_items, self.shard_bits, self.bit_offsets)
-
     @property
     def fill_ratio(self) -> float:
         # popcount WITHOUT materializing an 8x unpacked copy: a full
@@ -343,7 +304,7 @@ def build_bloom(
     plain count). ``max_driver_bytes`` raises :class:`BloomBudgetError`
     *before* any bitmap materializes when the estimate exceeds it.
     ``num_bits``/``num_hash`` override sizing to force a shape (building
-    shape-compatible filters for union/insert_df; unsharded only).
+    shape-compatible filters for insert_df; unsharded only).
 
     This is an action — the filter materializes on the driver, exactly
     like the reference building its BF before the probe loop

@@ -409,7 +409,7 @@ def edge_support(edges: DataFrame) -> DataFrame:
     Shape at scale: adjacency = both edge orientations; support = one
     self-join of adjacency keyed on the neighbor then a pair-keyed
     count — cost O(sum deg^2) over the CANDIDATE graph, whose degree the
-    blocking stage already bounds (stop-band caps / meta-blocking); the
+    blocking stage already bounds (stop-band caps); the
     entity tables are never touched.
 
     The input is treated as an UNDIRECTED simple graph: orientation and

@@ -484,85 +484,3 @@ def _fs_banded_decision(scored: DataFrame, in_band, deps: list | None = None) ->
             ).alias("is_dup"),
         )
     )
-
-
-def monge_elkan_batch(
-    a_tok_lists: list[list[str]], b_tok_lists: list[list[str]]
-) -> np.ndarray:
-    """Directed Monge-Elkan over token lists: for each row,
-    ``mean over tokens t of a: max over tokens u of b: JW(t, u)`` —
-    the hybrid scorer of Monge & Elkan 1996 with Jaro-Winkler as the
-    internal measure, the classic choice for multi-word names where
-    token order and token count differ between the two mentions.
-
-    Batch shape: the whole batch's (a-token, b-token) cross products are
-    packed into two flat string lists (packing loops only — same role as
-    the padding memcpy in ``jaro_winkler_batch``), ONE
-    ``jaro_winkler_batch`` call scores them all, and the per-a-token max
-    / per-row mean are ``np.maximum.reduceat`` / ``np.add.reduceat``
-    segment reductions over the contiguous layout. No per-pair Python in
-    the compute.
-
-    Rows where either side has zero tokens score 0.0. Duplicate tokens
-    are occurrences, not a set — each contributes its own term to the
-    mean (the Monge-Elkan definition).
-    """
-    B = len(a_tok_lists)
-    if B == 0:
-        return np.zeros(0)
-    na = np.array([len(t) for t in a_tok_lists], dtype=np.int64)
-    nb = np.array([len(t) for t in b_tok_lists], dtype=np.int64)
-    live = (na > 0) & (nb > 0)
-    flat_a: list[str] = []
-    flat_b: list[str] = []
-    for i in np.flatnonzero(live):
-        ta, tb = a_tok_lists[i], b_tok_lists[i]
-        for t in ta:  # packing only; scoring is one batched call below
-            flat_a.extend([t] * len(tb))
-            flat_b.extend(tb)
-    out = np.zeros(B)
-    if not flat_a:
-        return out
-    jw = jaro_winkler_batch(flat_a, flat_b)
-    # contiguous segments: one block of len(tb) per (row, a-token)
-    seg_sizes = np.repeat(nb[live], na[live])
-    seg_starts = np.concatenate([[0], np.cumsum(seg_sizes)[:-1]])
-    maxes = np.maximum.reduceat(jw, seg_starts)
-    row_starts = np.concatenate([[0], np.cumsum(na[live])[:-1]])
-    sums = np.add.reduceat(maxes, row_starts)
-    out[live] = sums / na[live]
-    return out
-
-
-def monge_elkan_udf(prefix_cap: int = JW_PREFIX_CAP):
-    """Arrow-batched directed Monge-Elkan pandas UDF
-    ``(name_a, name_b) -> double``: whitespace-tokenize both names, then
-    ``monge_elkan_batch``. Asymmetric by definition — call twice and
-    average for the symmetric variant. Tokens are truncated to
-    ``prefix_cap`` CHARACTERS (codepoints) before comparison, the same
-    units as the DuckDB ``jaro_winkler_similarity`` oracle."""
-
-    @F.pandas_udf("double")
-    def me(a: pd.Series, b: pd.Series) -> pd.Series:
-        at = [[t[:prefix_cap] for t in s.split()] for s in a.fillna("")]
-        bt = [[t[:prefix_cap] for t in s.split()] for s in b.fillna("")]
-        return pd.Series(monge_elkan_batch(at, bt))
-
-    return me
-
-
-def monge_elkan_on_pairs(
-    pairs: DataFrame,
-    name_a: str = "name_a",
-    name_b: str = "name_b",
-) -> DataFrame:
-    """Score candidate pairs with Monge-Elkan/JW: adds ``me_ab`` (a→b),
-    ``me_ba`` (b→a) and the symmetric ``me_sym`` = their mean. One
-    Arrow round-trip per direction over the pair batch; everything else
-    stays in codegen."""
-    me = monge_elkan_udf()
-    return (
-        pairs.withColumn("me_ab", me(F.col(name_a), F.col(name_b)))
-        .withColumn("me_ba", me(F.col(name_b), F.col(name_a)))
-        .withColumn("me_sym", (F.col("me_ab") + F.col("me_ba")) / 2.0)
-    )

@@ -37,6 +37,17 @@ from dedupe_spark.catalog import SnapshotCatalog
 from dedupe_spark.operators import blocking, clustering, lifecycle, minhash, normalize, scoring
 from dedupe_spark.operators.transcript_qa import transcript_lint
 
+# chunk_aac-style blocking-key policy (C4, reference
+# src/deduplication.cpp:1350-1390): with PipelineConfig.aac_policy on,
+# conversations whose tool-role (machine output) share of turns reaches
+# this get exact-fp keys only — the MinHash signature is never computed
+AAC_EXACT_TOOL_FRAC = 0.6
+# PipelineConfig.cluster_repair (clustering.prune_weak_edges): a bridge
+# edge needs this many common neighbors, unless its jaccard reaches
+# CLUSTER_REPAIR_STRONG
+CLUSTER_REPAIR_MIN_SUPPORT = 1
+CLUSTER_REPAIR_STRONG = 0.9
+
 
 @dataclass
 class PipelineConfig:
@@ -54,10 +65,12 @@ class PipelineConfig:
     # "fellegi_sunter" (EM-learned accept rule over the band's comparison
     # vectors, operators/linkage.py — no hand-tuned accept threshold)
     decider: str = "levenshtein"
-    # bloom_mode applies to link (cross_bloom_preprune) only, and
-    # bloom_shards / bloom_max_driver_bytes to link and run_incremental's
-    # registry probe; run() prunes singleton band keys exactly, off its
-    # one frequency pass.
+    # bloom_mode is read only by callers of blocking.bloom_preprune
+    # (the traced benchmark's layer replay); bloom_shards /
+    # bloom_max_driver_bytes only by run_incremental's registry probe
+    # and that replay. run() and link() build no Bloom: run() prunes
+    # singleton band keys off its one frequency pass, and link()'s key
+    # join drops every key one side lacks.
     # "bloom" = explicit map-side Bloom pre-prune (functions/bloom.py);
     # "semi" = semi-join + Catalyst runtime bloom filter;
     # "auto" (default) = bloom while the key bitmap fits
@@ -66,12 +79,9 @@ class PipelineConfig:
     bloom_mode: str = "auto"
     bloom_shards: int = 1
     bloom_max_driver_bytes: int = blocking.DEFAULT_BLOOM_BUDGET_BYTES
-    # chunk_aac-style blocking-key policy (C4, reference
-    # src/deduplication.cpp:1350-1390): conversations dominated by
-    # tool-role turns (machine output) get exact-fp keys only — the
-    # MinHash signature is never computed for them
+    # exact-fp keys only for tool-dominated conversations
+    # (AAC_EXACT_TOOL_FRAC)
     aac_policy: bool = True
-    aac_exact_tool_frac: float = 0.6
     # PII scrub BEFORE fingerprinting (operators/privacy.py): two turns
     # differing only in an email/IP/phone still collide on their blocking
     # key, and no raw identifier ever reaches a committed table. Pure
@@ -87,10 +97,9 @@ class PipelineConfig:
     # high-confidence — transitive clustering otherwise merges two real
     # entities through one spurious score. Exact-fp edges are certain:
     # they count as witnesses and are never pruned. run() only:
-    # run_incremental refuses it (support needs the committed graph)
+    # run_incremental refuses it (support needs the committed graph).
+    # Thresholds: CLUSTER_REPAIR_MIN_SUPPORT, CLUSTER_REPAIR_STRONG
     cluster_repair: bool = False
-    cluster_repair_min_support: int = 1
-    cluster_repair_strong: float = 0.9
     checkpoint_dir: str | None = None
     resume: bool = False
     # metrics cost ~23 extra Spark jobs (each count re-executes its
@@ -104,15 +113,14 @@ class PipelineConfig:
     #   "many_to_one" — every A record keeps its single best link (a
     #                   probe batch matched against a registry; several
     #                   A records may hit the same B record)
-    #   "all"         — every accepted link, unassigned (caller resolves)
+    #   "all"         — every accepted link, unassigned (caller resolves).
+    #                   Same-fingerprint records: only the per-fingerprint
+    #                   minimum registry id is an "exact" link; the other
+    #                   same-fingerprint registry records come back as
+    #                   "near" links at score 1.0 when blocking pairs
+    #                   them, and not at all when the stop band or the
+    #                   AAC skip drops their band keys
     link_mode: str = "one_to_one"
-    # link(catalog=...) also commits the registry-side probe state
-    # (fp index, band blocks, docs+shingles) so link_incremental can
-    # probe later batches without re-blocking the registry; disable when
-    # the warehouse should hold only the links table (the state costs
-    # O(registry) storage and is dead weight if no batches follow)
-    link_commit_registry_state: bool = True
-    extra: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -165,7 +173,7 @@ def _docs_with_bands(transcripts: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # (exact-fp edges only) and no shingles, in the same projection as
     # every other row — one conv_id shuffle feeds the signature UDF
     skip = (
-        F.col("tool_frac") >= F.lit(cfg.aac_exact_tool_frac) if cfg.aac_policy else None
+        F.col("tool_frac") >= F.lit(AAC_EXACT_TOOL_FRAC) if cfg.aac_policy else None
     )
     return minhash.with_minhash_bands(
         docs, "doc", k=cfg.shingle_k, num_perm=cfg.num_perm, bands=cfg.bands, seed=cfg.seed,
@@ -292,8 +300,8 @@ def _resolve_delta(
     if cfg.cluster_repair:
         sim_edges = clustering.prune_weak_edges(
             sim_edges,
-            min_support=cfg.cluster_repair_min_support,
-            strong_score=cfg.cluster_repair_strong,
+            min_support=CLUSTER_REPAIR_MIN_SUPPORT,
+            strong_score=CLUSTER_REPAIR_STRONG,
             score_col="jaccard",
             witness_edges=exact_edges,
         )
@@ -397,7 +405,16 @@ def _assign_links(exact: DataFrame, scored: DataFrame, mode: str) -> DataFrame:
     """Links from exact pairs ``(id_a, id_b)`` and the accepted scored
     pairs, assigned per ``mode`` (see ``PipelineConfig.link_mode``), as
     ``(conv_id_a, conv_id_b, score, link_type)`` with side tags stripped.
-    Exact links carry score 2.0 so they outrank any fuzzy score."""
+    Exact links carry score 2.0 so they outrank any fuzzy score.
+
+    Outside one-to-one mode ``exact`` holds one pair per probe record:
+    its fingerprint's minimum registry id. In ``all`` mode a probe
+    record's other same-fingerprint registry records are therefore not
+    exact links: blocking pairs them like any near duplicate, so they
+    come back as ``near`` links at score 1.0 (identical documents), or
+    not at all when the stop band (a fingerprint with more than
+    ``max_block`` copies on either side) or the AAC skip (no band keys)
+    drops them."""
     exact_links = exact.select(
         "id_a", "id_b", F.lit(2.0).alias("score"), F.lit("exact").alias("link_type")
     )
@@ -480,10 +497,11 @@ def link(
       2. exact links across tables on the fingerprint; one-to-one mode
          rank-zips each fingerprint group (k A-copies × j B-copies give
          min(k, j) links, linear output, no quadratic group fan-out);
-      3. fuzzy candidates: Bloom probe of A's blocks against B's key
-         set, then the salted skew-aware CROSS join
+      3. fuzzy candidates: the salted skew-aware CROSS join
          (blocking.cross_candidate_pairs — no id_a < id_b, the sides
-         are distinct namespaces);
+         are distinct namespaces); its inner join of the two sides' key
+         counts drops every key one side lacks, so no Bloom probe runs
+         in front of it;
       4. the same cheap→expensive verification scoring as ``run``
          (Jaccard gate → configured decider) over the union doc table;
       5. assignment per ``config.link_mode``: reciprocal-best one-to-one
@@ -525,17 +543,11 @@ def link(
     exact = exact.persist()
     persisted.append(exact)
 
-    # 3. fuzzy candidates: bloom probe + salted cross join
-    blocks_a = blocking.explode_blocks(docs_a, "conv_id", "bands")
-    blocks_b = blocking.explode_blocks(docs_b, "conv_id", "bands")
-    bloom_stats: dict = {}
-    blocks_a, blocks_b = blocking.cross_bloom_preprune(
-        blocks_a, blocks_b,
-        mode=cfg.bloom_mode, stats=bloom_stats, shards=cfg.bloom_shards,
-        max_driver_bytes=cfg.bloom_max_driver_bytes, deps=persisted,
-    )
+    # 3. fuzzy candidates: salted cross join (its inner key join drops
+    # every key one side lacks)
     cands = blocking.cross_candidate_pairs(
-        blocks_a, blocks_b,
+        blocking.explode_blocks(docs_a, "conv_id", "bands"),
+        blocking.explode_blocks(docs_b, "conv_id", "bands"),
         max_block=cfg.max_block,
         salt_threshold=cfg.salt_threshold,
         salt_groups=cfg.salt_groups,
@@ -569,9 +581,6 @@ def link(
                 ("n_candidate_pairs", float(n_cand)),
                 ("n_links", float(n_links)),
                 ("link_rate_a", float(n_links) / n_a if n_a else 0.0),
-                # 1.0 = map-side Bloom pruned the probe; 0.0 = semi-join
-                # fallback (budget or config) — visible from the artifact
-                ("bloom_mode_is_bloom", 1.0 if bloom_stats.get("bloom_mode_used") == "bloom" else 0.0),
             ],
             "metric string, value double",
         )
@@ -582,7 +591,6 @@ def link(
     if catalog is not None:
         catalog.write("links", links)
         catalog.write("link_metrics", metrics)
-    if catalog is not None and cfg.link_commit_registry_state:
         # registry-side probe state, so later probe batches can link
         # against this registry WITHOUT re-blocking it
         # (link_incremental): the registry's exact-fp index and band

@@ -4,9 +4,10 @@
 The north rule's deployment shape is ``spark-submit --py-files`` on a
 multi-executor cluster. ``local[*]`` hides a class of bugs that only
 appear when code and data actually cross process boundaries: closure
-pickling, ``sparkContext.broadcast`` of the bloom bitmap, Arrow batch
-transfer to per-executor Python workers. This script is submitted by
-tests/test_cluster_smoke.py via ``spark-submit --master
+pickling and Arrow batch transfer to per-executor Python workers (the
+MinHash signature UDF). ``pipeline.run`` broadcasts no Bloom bitmap: it
+prunes singleton band keys off one exact frequency pass. This script is
+submitted by tests/test_cluster_smoke.py via ``spark-submit --master
 local-cluster[2,2,2048] --py-files dedupe_spark.zip`` — two separate
 worker JVMs, each with its own Python workers — and writes the
 resulting cluster assignment as JSON for equality comparison against

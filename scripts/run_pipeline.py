@@ -36,12 +36,8 @@ def main() -> None:
     ap.add_argument("--checkpoint-dir", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--bloom-mode", default="auto", choices=["auto", "bloom", "semi"],
-                    help="--link-registry probe: explicit map-side bloom pre-prune vs "
-                         "semi-join + runtime filter; auto picks bloom while the bitmap "
-                         "fits the driver budget")
     ap.add_argument("--bloom-shards", type=int, default=1,
-                    help="shard the bloom build of --link-registry and --incremental "
+                    help="shard the registry bloom build of --incremental "
                          "(bounded per-shard aggregates)")
     ap.add_argument("--decider", default="levenshtein",
                     choices=["levenshtein", "jaro_winkler", "fellegi_sunter"],
@@ -107,7 +103,6 @@ def main() -> None:
     cfg = PipelineConfig(
         checkpoint_dir=args.checkpoint_dir,
         resume=args.resume,
-        bloom_mode=args.bloom_mode,
         bloom_shards=args.bloom_shards,
         decider=args.decider,
         aac_policy=not args.no_aac,

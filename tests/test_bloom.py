@@ -36,20 +36,6 @@ def test_false_positive_rate_bounded(spark):
     assert fp / 20_000 < 1e-2  # an order of slack over the 1e-3 target
 
 
-def test_set_algebra(spark):
-    a_keys = spark.range(0, 1000).select(F.concat(F.lit("k"), "id").alias("key"))
-    b_keys = spark.range(500, 1500).select(F.concat(F.lit("k"), "id").alias("key"))
-    # equal shape: same expected_items/fpp
-    a = build_bloom(a_keys, "key", expected_items=1500, fpp=1e-3)
-    b = build_bloom(b_keys, "key", expected_items=1500, fpp=1e-3)
-    u = a.union(b)
-    both = spark.range(0, 1500).select(F.concat(F.lit("k"), "id").alias("key"))
-    assert u.probe(both, "key").count() == 1500  # no false negatives in union
-    i = a.intersect(b)
-    overlap = spark.range(500, 1000).select(F.concat(F.lit("k"), "id").alias("key"))
-    assert i.probe(overlap, "key").count() == 500  # superset of true intersection
-
-
 def test_sharded_no_false_negatives_and_matches_monolith(spark):
     """Shard output ≡ monolith output on the same keys (VERDICT r2 task 1
     done-criterion): identical probe hits on inserted keys, comparable
@@ -120,26 +106,6 @@ def test_save_load_file(spark, tmp_path):
     p = str(tmp_path / "registry.bloom")
     b.save(p)
     assert Bloom.load(p).probe(keys, "key").count() == 500
-
-
-def test_xor_diff_algebra(spark):
-    """Bitmap algebra mirrors the reference's &= |= ^= operators
-    (BloomFilter.cpp:161-198 and BLOOMFILTER_TEST :490-562)."""
-    a_keys = spark.range(0, 1000).select(F.concat(F.lit("k"), "id").alias("key"))
-    b_keys = spark.range(500, 1500).select(F.concat(F.lit("k"), "id").alias("key"))
-    a = build_bloom(a_keys, "key", expected_items=1500, fpp=1e-3)
-    b = build_bloom(b_keys, "key", expected_items=1500, fpp=1e-3)
-    x = a.xor(b)
-    # xor identities: a^a = 0, (a^b)^b = a
-    assert a.xor(a).fill_ratio == 0.0
-    assert (x.xor(b).words == a.words).all()
-    # diff clears b's bits: (a - b) AND b = 0
-    d = a.diff(b)
-    assert int((d.words & b.words).sum()) == 0
-    # union/intersect/xor all refuse mismatched shapes
-    small = build_bloom(a_keys, "key", expected_items=10, fpp=1e-3)
-    with pytest.raises(ValueError):
-        a.xor(small)
 
 
 def test_insert_df_warm_path(spark):

@@ -87,6 +87,33 @@ def test_link_all_mode_superset(spark, sources):
     assert rec >= 0.99, f"recall={rec:.4f} (precision={prec:.4f})"
 
 
+#: Spark jobs one ``link(many_to_one, compute_metrics=True)`` of the
+#: module's sources takes in the test session: 30 with no Bloom
+#: pre-prune in front of ``cross_candidate_pairs`` (its inner key join
+#: already drops every key one side lacks), 44 with one. A link of this
+#: size pays for its job count, not its rows.
+LINK_JOBS = 30
+
+
+def test_link_job_count_guard(spark, sources):
+    probe, registry, _ = sources
+    probe.count(), registry.count()  # the shared inputs are cached outside the group
+    sc = spark.sparkContext
+    group = "test-link-job-count"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        res = pipeline.link(
+            probe, registry,
+            pipeline.PipelineConfig(link_mode="many_to_one", compute_metrics=True),
+        )
+        res.links.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    res.release()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= LINK_JOBS + 5, f"pipeline.link took {jobs} Spark jobs"
+
+
 def test_link_commits_tables(spark, sources, tmp_path):
     from dedupe_spark.catalog import SnapshotCatalog
 

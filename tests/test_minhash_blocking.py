@@ -158,8 +158,10 @@ def test_cross_pairs_per_key_salt_rule(spark):
     """The salted join decides hot vs cold per key, off greatest(dfa,
     dfb), so both sides of a key take the same tier: a key hot on one
     side only, keys at salt_threshold and salt_threshold + 1, and a key
-    stop-banded on one side all give the brute-force pair set. Ids repeat
-    across keys, so a pair two keys share must come out once."""
+    stop-banded on one side all give the brute-force pair set. A key on
+    one side only gives no pair, whatever its tier on that side: the key
+    join alone drops it. Ids repeat across keys, so a pair two keys
+    share must come out once."""
     salt_threshold, max_block = 4, 8
     # key -> (rows on side A, rows on side B)
     keys = {
@@ -169,6 +171,9 @@ def test_cross_pairs_per_key_salt_rule(spark):
         "k_at1": (salt_threshold + 1, salt_threshold + 1),
         "k_stop_a": (max_block + 1, 1),
         "k_a_only": (3, 0),
+        "k_b_only": (0, 3),
+        "k_hot_a_only": (salt_threshold + 2, 0),
+        "k_stop_a_only": (max_block + 1, 0),
     }
     rows_a, rows_b = [], []
     for j, (k, (na, nb)) in enumerate(keys.items()):
@@ -241,13 +246,3 @@ def test_exact_key_pairs_matches_group_join(spark, id_type):
     got = sorted(tuple(r) for r in blocking.exact_key_pairs(df, "id", "k").collect())
     assert got == want
     assert not {x for p in got for x in p} & {conv(100), conv(101), conv(102), conv(103)}
-
-
-def test_blocking_quality_ignores_null_keys(spark):
-    """NULL keys never join, so they must not contribute candidates."""
-    df = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, None), (4, None), (5, None)], "id long, k string"
-    )
-    (r,) = blocking.blocking_quality(df, "id", "k").collect()
-    assert r["candidate_pairs"] == 1  # only the "a" block
-    assert r["n_blocks"] == 1

@@ -1,25 +1,8 @@
-"""uncertainty_sample (active-learning batch selection) and
-deletion_neighborhood_pairs (FastSS/SymSpell edit-distance-1 join)."""
+"""uncertainty_sample (active-learning batch selection)."""
 
 from __future__ import annotations
 
-import itertools
-
-import pytest
-from pyspark.sql import functions as F
-
-from dedupe_spark.operators.blocking import deletion_neighborhood_pairs
 from dedupe_spark.operators.linkage import uncertainty_sample
-
-
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[len(b)]
 
 
 def test_uncertainty_sample_picks_closest_to_half(spark):
@@ -40,84 +23,3 @@ def test_uncertainty_sample_deterministic_ties(spark):
     scored = spark.createDataFrame(rows, "id_a long, id_b long, match_prob double")
     got = uncertainty_sample(scored, k=4).select("id_a").collect()
     assert [r["id_a"] for r in got] == [0, 1, 2, 3]
-
-
-VOCAB = [
-    "cat",   # sub/insert/delete neighbors below
-    "cut",   # substitution of cat
-    "cart",  # insertion into cat
-    "ca",    # deletion from cat
-    "cat",   # exact duplicate key under a different id
-    "xa",    # with "ay": shares deletion variant "a" but distance 2
-    "ay",
-    "",      # empty key: within 1 edit of any single char
-    "a",
-    "dog",
-]
-
-
-def test_deletion_neighborhood_matches_brute_force(spark):
-    rows = [(i, w) for i, w in enumerate(VOCAB)]
-    df = spark.createDataFrame(rows, "id long, w string")
-    got = {
-        (r["id_a"], r["id_b"], r["edit_distance"])
-        for r in deletion_neighborhood_pairs(df, "id", "w").collect()
-    }
-    want = {
-        (ia, ib, _lev(wa, wb))
-        for (ia, wa), (ib, wb) in itertools.combinations(rows, 2)
-        if _lev(wa, wb) <= 1
-    }
-    assert got == want  # full recall AND no distance-2 collisions kept
-    # the distance-2 collision pair shared a variant but must be gone
-    assert not any(r[:2] == (5, 6) for r in got)
-    # exact-duplicate keys pair at distance 0
-    assert (0, 4, 0) in got
-
-
-def test_deletion_neighborhood_rejects_depth_2(spark):
-    df = spark.createDataFrame([(1, "ab")], "id long, w string")
-    with pytest.raises(ValueError):
-        deletion_neighborhood_pairs(df, "id", "w", max_edits=2)
-
-
-def test_deletion_neighborhood_hot_short_keys(spark):
-    # adversarial skew: a vocabulary dominated by 2-3 char keys whose
-    # 1-char deletion variants collide on a handful of hot buckets
-    # (docstring warning, blocking.deletion_neighborhood_pairs). 600 ids
-    # over 6 short keys -> every variant bucket is hot; output must
-    # still be exactly the brute-force distance<=1 pair set.
-    short = ["ab", "ac", "bc", "a", "b", "abc"]
-    rows = [(i, short[i % len(short)]) for i in range(600)]
-    df = spark.createDataFrame(rows, "id long, w string")
-    got = {
-        (r["id_a"], r["id_b"])
-        for r in deletion_neighborhood_pairs(df, "id", "w").collect()
-    }
-    want = {
-        (ia, ib)
-        for (ia, wa), (ib, wb) in itertools.combinations(rows, 2)
-        if _lev(wa, wb) <= 1
-    }
-    assert got == want
-
-
-def test_blocking_rule_coverage_empty_rules(spark):
-    from dedupe_spark.operators.blocking import blocking_rule_coverage
-
-    with pytest.raises(ValueError):
-        blocking_rule_coverage([])
-
-
-def test_blocking_rule_coverage_incremental_counts(spark):
-    from dedupe_spark.operators.blocking import blocking_rule_coverage
-
-    # rule A pairs (1,2); rule B pairs (1,2) and (3,4); rule C adds none
-    a = spark.createDataFrame([(1, "x"), (2, "x"), (3, "y"), (4, "z")], "id long, k string")
-    b = spark.createDataFrame([(1, "p"), (2, "p"), (3, "q"), (4, "q")], "id long, k string")
-    c = spark.createDataFrame([(3, "r"), (4, "r")], "id long, k string")
-    got = {
-        r["rule"]: (r["n_pairs"], r["n_new_pairs"], r["cum_pairs"])
-        for r in blocking_rule_coverage([("A", a), ("B", b), ("C", c)]).collect()
-    }
-    assert got == {"A": (1, 1, 1), "B": (2, 1, 2), "C": (1, 0, 2)}
